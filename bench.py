@@ -1,27 +1,31 @@
 """Benchmark harness (driver contract: one JSON line on stdout).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS]. Each query executes through a noop sink so
-the timing covers the full physical plan (scan -> shuffle -> sink)
-without driver-side row serialization skew. A DuckDB run of the same
-oracle SQL is timed alongside (informational: the BASELINE target is
-"within 2x of DuckDB per query").
+Runs the headline pairs at $SPARK_GRAFT_SF_DIR (default sf0.1) on
+local[$SPARK_GRAFT_CPUS], then, unless SPARK_GRAFT_SF1=0, the sf1
+crossover pairs in a child process with its own JVM. One function,
+``time_pair``, times every pair at both scales: it warms both engines,
+then alternates a Spark noop-sink run with a DuckDB run of the oracle
+SQL, so each ratio is taken under one host state and a run needs no
+other run to be trusted. The BASELINE target is "within 2x of DuckDB
+per query".
 
-Output contract (r5 verdict #1): stdout carries at most two JSON lines —
-an early ``{"partial": true, ...}`` snapshot after the sf0.1 section,
-then ONE compact final line (guaranteed <3.8 KB, inside the driver's
-~4 KB tail capture) with the headline numbers and the sf1 ratio summary.
-The full record (per-query min/median/n/spread for both engines, sf1
-detail, errors) is written to $SPARK_GRAFT_BENCH_DETAIL (default
-/tmp/bench_full.json) and mirrored to ./BENCH_FULL.json so it survives
-the sandbox via the end-of-round commit.
+Output contract: stdout carries two JSON lines — a ``{"partial": true,
+...}`` snapshot after the sf0.1 section, then ONE compact final line
+shorter than STDOUT_LINE_BUDGET bytes (whoever runs the bench reads
+only the last 2,000 bytes of stdout). The full record (per-pair
+min/median/n/spread for both engines, the sf1 section, errors) is
+written to $SPARK_GRAFT_BENCH_DETAIL (default /tmp/bench_full.json). A
+run at the headline sf whose sf1 section measured pairs also mirrors it
+to ./BENCH_FULL.json, which then describes that one run.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -333,6 +337,10 @@ HEADLINE = [
 
 
 N_RUNS = 5  # min-of-N: sub-second timings carry ~20% scheduler noise
+METRIC = (
+    f"headline query wall-clock, noop sink, min-of-{N_RUNS}, "
+    "interleaved with DuckDB per pair"
+)
 
 #: floor-band policy, the single definition (r14 advice: these were
 #: duplicated in tools/weak_set.py and could drift): a >2x row whose
@@ -342,24 +350,8 @@ N_RUNS = 5  # min-of-N: sub-second timings carry ~20% scheduler noise
 FLOOR_BAND_SPARK_S = 1.5
 FLOOR_BAND_DUCK_S = 0.25
 
-
-def _duck_connect():
-    """DuckDB connection with spills pinned to /tmp: the default
-    temp_directory is cwd-relative ".tmp" (i.e. inside the repo), and a
-    big sf1 window sort spilling there alongside Spark's own shuffle
-    temp once filled the disk mid-run and killed the whole sf1 section.
-    """
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute("SET temp_directory='/tmp/duckdb_bench_tmp'")
-    # bound the spill so a pathological query (the iterative pagerank
-    # twin spills >79 GB) fails fast with a clean error instead of
-    # driving the shared disk to 0 bytes free — the r5/r6 full runs both
-    # lost the remainder of the sf1 section to that exhaustion.
-    con.execute("SET max_temp_directory_size='40GB'")
-    return con
-
+#: the sf the committed repo record (./BENCH_FULL.json) describes
+HEADLINE_SF = "0.1"
 
 #: adaptive repeat cutoff: once a single run exceeds this, further
 #: repeats buy noise-rejection at an unacceptable wall-clock (and, for
@@ -367,67 +359,13 @@ def _duck_connect():
 #: still reject a single spike.
 SLOW_RUN_CUTOFF_S = 10.0
 
-
-def _timed(run_once, n_runs: int) -> dict:
-    """Repeat ``run_once`` up to n_runs times and return the full
-    dispersion record, not just a point estimate:
-
-    * ``min`` — the plan's cost (local noise is strictly additive:
-      GC, scheduler, steal time — the minimum is the honest floor);
-    * ``med`` — the typical cost on THIS host at THIS moment;
-    * ``n`` — runs actually timed (the adaptive cutoff can shrink it,
-      so cross-round deltas are interpretable — ADVICE r5 #4);
-    * ``spread`` — max/min; >2.0 means the environment, not the plan,
-      dominated the window and the number should be read as
-      unmeasured (r5 verdict: two same-day sf1 runs disagreed 28x).
-
-    Queries slower than SLOW_RUN_CUTOFF_S repeat only once more.
-    """
-    times: list[float] = []
-    for i in range(n_runs):
-        t0 = time.perf_counter()
-        run_once()
-        times.append(time.perf_counter() - t0)
-        if min(times) > SLOW_RUN_CUTOFF_S and i >= 1:
-            break
-    times.sort()
-    n = len(times)
-    med = times[n // 2] if n % 2 else (times[n // 2 - 1] + times[n // 2]) / 2
-    return {
-        "min": round(times[0], 3),
-        "med": round(med, 3),
-        "n": n,
-        "spread": round(times[-1] / times[0], 2) if times[0] > 0 else 1.0,
-    }
-
-
-def run_spark(fn, spark, sf_dir: str, n_runs: int = N_RUNS) -> dict:
-    """Steady-state timing: one warmup run (JIT + page cache), then the
-    dispersion record of n_runs timed runs (see _timed).
-
-    DuckDB gets the same treatment in run_duckdb for a fair comparison.
-    """
-    fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-
-    def once():
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-
-    return _timed(once, n_runs)
-
-
-def run_duckdb(con, sql: str, n_runs: int = N_RUNS) -> dict:
-    con.execute(sql).fetchall()  # warmup (page cache)
-    return _timed(lambda: con.execute(sql).fetchall(), n_runs)
-
-
-#: hard wall-clock budget for ONE sf1 DuckDB query (warmup + all timed
+#: hard wall-clock budget for ONE DuckDB query (warmup + all timed
 #: runs). The round-9 full run lost the ENTIRE sf1 section to the
 #: subprocess's 5400 s timeout with zero output — no single query
 #: wedged (every twin probes <12 s cold), the 48-query set simply
 #: outgrew the budget at min-of-5 per engine. The budget turns an
-#: over-slow query into a per-query `dnf_budget` error instead of a
-#: section-wide loss.
-SF1_DUCK_QUERY_BUDGET_S = 150.0
+#: over-slow query into a per-pair error instead of a section-wide loss.
+DUCK_QUERY_BUDGET_S = 150.0
 
 #: per-query budget overrides: llm_eval_ngram_recall's equal-work twin
 #: runs ~43 s per pass (11.5M list_intersect pairs), so warmup + 2
@@ -437,142 +375,204 @@ SF1_DUCK_QUERY_BUDGET_S = 150.0
 #: 450 s fits three ~50%-degraded passes while staying bounded.
 SF1_DUCK_BUDGET_OVERRIDES = {"llm_eval_ngram_recall": 450.0}
 
+DUCK_TEMP_DIR = "/tmp/duckdb_bench_tmp"
 
-def run_duckdb_budgeted(
-    con, sql: str, n_runs: int = N_RUNS, budget_s: float | None = None
-) -> dict:
-    """run_duckdb under a wall budget: a timer thread calls
-    ``con.interrupt()`` when the budget expires; the partially-timed
-    window is returned if at least one run finished, else the
-    InterruptException propagates (caller records dnf). The timer
-    callback is guarded by a done flag so a budget expiring in the gap
-    between the last fetchall and timer.cancel() cannot leave a
-    pending interrupt on the shared connection (ADVICE r9)."""
-    import threading
 
-    done = threading.Event()
+def _duck_connect():
+    """DuckDB connection with spills pinned to /tmp: the default
+    temp_directory is cwd-relative ".tmp" (i.e. inside the repo), and a
+    big sf1 window sort spilling there alongside Spark's own shuffle
+    temp once filled the disk mid-run and killed the whole sf1 section.
 
-    def _interrupt() -> None:
-        if not done.is_set():
-            con.interrupt()
+    The spill is capped at half the free space of that filesystem, so a
+    pathological query (the iterative pagerank twin spills >79 GB)
+    fails fast with a clean error instead of driving the shared disk to
+    0 bytes free, and the other half stays free for Spark's shuffle
+    files, which share the disk with it while the engines alternate.
+    """
+    import duckdb
 
-    timer = threading.Timer(
-        budget_s if budget_s is not None else SF1_DUCK_QUERY_BUDGET_S,
-        _interrupt,
-    )
-    timer.start()
-    times: list[float] = []
-    try:
-        con.execute(sql).fetchall()  # warmup
-        for i in range(n_runs):
-            t0 = time.perf_counter()
-            con.execute(sql).fetchall()
-            times.append(time.perf_counter() - t0)
-            if min(times) > SLOW_RUN_CUTOFF_S and i >= 1:
-                break
-    except Exception:
-        if not times:
-            raise
-    finally:
-        done.set()
-        timer.cancel()
-    times.sort()
-    n = len(times)
-    med = times[n // 2] if n % 2 else (times[n // 2 - 1] + times[n // 2]) / 2
+    con = duckdb.connect()
+    con.execute(f"SET temp_directory='{DUCK_TEMP_DIR}'")
+    cap_mib = _free_bytes(os.path.dirname(DUCK_TEMP_DIR)) // 2 // 1024**2
+    con.execute(f"SET max_temp_directory_size='{cap_mib}MiB'")
+    return con
+
+
+def _summary(times: list[float]) -> dict:
+    """The dispersion record of one engine's timed window, not just a
+    point estimate:
+
+    * ``min`` — the plan's cost (local noise is strictly additive:
+      GC, scheduler, steal time — the minimum is the honest floor);
+    * ``med`` — the typical cost on THIS host at THIS moment;
+    * ``n`` — runs actually timed (the slow-run cutoff and the DuckDB
+      budget can shrink it, so cross-round deltas are interpretable);
+    * ``spread`` — max/min; >2.0 means the environment, not the plan,
+      dominated the window and the number should be read as
+      unmeasured.
+    """
+    lo, hi = min(times), max(times)
     return {
-        "min": round(times[0], 3),
-        "med": round(med, 3),
-        "n": n,
-        "spread": round(times[-1] / times[0], 2) if times[0] > 0 else 1.0,
+        "min": round(lo, 3),
+        "med": round(statistics.median(times), 3),
+        "n": len(times),
+        "spread": round(hi / lo, 2) if lo > 0 else 1.0,
     }
 
 
-def _sf1_progress_path() -> str:
-    import tempfile
-
-    return os.path.join(tempfile.gettempdir(), "bench_sf1_progress.jsonl")
-
-
-def _sf1_from_progress(err: str, run_id: str | None = None) -> dict:
-    """Reconstruct a partial sf1 record from the incremental progress
-    file when the subprocess died before writing its final JSON (the
-    round-9 failure mode: a 5400 s timeout erased 90 minutes of
-    completed measurements). Ratios are computed for every pair that
-    finished on both engines; the error is preserved so the record is
-    visibly partial.
-
-    ``run_id`` guards against the stale-file race (ADVICE r9): the
-    parent also unlinks the file before spawning, but if the child
-    died before bench_sf1's own write (e.g. during first-time sf1
-    synthesis) a file from an EARLIER run must not be published as
-    this run's measurements — the child stamps the file with its
-    run_id as the first record and a mismatch rejects the file."""
-    duck: dict[str, dict] = {}
-    sparkd: dict[str, dict] = {}
-    cold: dict[str, float] = {}
-    cold_duck: dict[str, float] = {}
-    floor_s = 0.0
-    seen_run_id: str | None = None
-    errors: dict[str, str] = {"section": err}
+def _timed_once(run, interrupt=None, budget_s: float = 0.0) -> float:
+    """Wall time of one ``run()``. With ``interrupt``, a timer thread
+    calls it if the run is still going after ``budget_s``; the done flag
+    keeps a timer that expires between the run's return and
+    ``cancel()`` from leaving an interrupt pending on the connection."""
+    done = threading.Event()
+    timer = threading.Timer(budget_s, lambda: done.is_set() or interrupt())
+    if interrupt is not None:
+        timer.start()
     try:
-        with open(_sf1_progress_path()) as f:
-            for line in f:
-                try:
-                    rec = json.loads(line)
-                except ValueError:
-                    continue
-                k, q, v = rec.get("k"), rec.get("q"), rec.get("v")
-                if k == "run_id":
-                    seen_run_id = str(v)
-                elif k == "duckdb":
-                    duck[q] = v
-                elif k == "spark":
-                    sparkd[q] = v
-                elif k == "spark_cold":
-                    cold[q] = v
-                elif k == "duckdb_cold":
-                    cold_duck[q] = v
-                elif k == "floor":
-                    floor_s = float(v)
-                elif k == "error":
-                    errors[q] = str(v)
-    except OSError:
-        return {"error": err}
-    if run_id is not None and seen_run_id != run_id:
-        return {"error": err, "stale_progress_rejected": True}
-    if not duck and not sparkd:
-        return {"error": err}
-    timings = {n: d["min"] for n, d in sparkd.items()}
-    dmin = {n: d["min"] for n, d in duck.items()}
-    unstable = sorted(
-        n
-        for n in set(sparkd) | set(duck)
-        if max(
-            sparkd.get(n, {}).get("spread", 1.0),
-            duck.get(n, {}).get("spread", 1.0),
-        )
-        > 2.0
-    )
+        t0 = time.perf_counter()
+        run()
+        return time.perf_counter() - t0
+    finally:
+        done.set()
+        timer.cancel()
+
+
+def time_pair(
+    spark_run,
+    duck_run=None,
+    interrupt=None,
+    n_runs: int = N_RUNS,
+    duck_budget_s: float = DUCK_QUERY_BUDGET_S,
+    warm: bool = True,
+) -> dict:
+    """Time one Spark/DuckDB pair interleaved, the SCALE.md §31 ABAB
+    protocol: one warm-up run per engine (JIT, page cache), then
+    ``n_runs`` rounds of one Spark run followed by one DuckDB run, so
+    both windows see the same host state. ``warm=False`` skips the
+    warm-up (cold timings); ``duck_run`` is None for a Spark-only row.
+
+    A side stops repeating once its fastest run exceeds
+    SLOW_RUN_CUTOFF_S after two runs. DuckDB's runs, warm-up included,
+    share ``duck_budget_s`` of wall time: past it ``interrupt()`` (the
+    connection's) cancels the run in flight. An exception ends only its
+    own side: a side with a timed run keeps its window and names the
+    error under ``stopped``, a side without one is reported in
+    ``errors`` — one failing query never costs the other engine's
+    numbers, or any other pair's.
+
+    Returns ``{"spark": summary | None, "duckdb": summary | None,
+    "errors": {side: message}}``, summaries as in ``_summary``.
+    """
+    runs = {"spark": spark_run, "duckdb": duck_run}
+    live = [side for side, run in runs.items() if run is not None]
+    times: dict[str, list[float]] = {side: [] for side in runs}
+    stopped: dict[str, str] = {}
+    duck_left = duck_budget_s
+
+    def once(side: str) -> float:
+        nonlocal duck_left
+        if side == "spark":
+            return _timed_once(spark_run)
+        if duck_left <= 0:
+            raise TimeoutError(f"DuckDB budget of {duck_budget_s:.0f} s spent")
+        dt = _timed_once(duck_run, interrupt, duck_left)
+        duck_left -= dt
+        return dt
+
+    for rnd in range(n_runs + 1 if warm else n_runs):
+        for side in list(live):
+            try:
+                dt = once(side)
+            except Exception as e:  # noqa: BLE001 - isolate the side
+                live.remove(side)
+                stopped[side] = _err(e)
+                continue
+            if warm and rnd == 0:
+                continue
+            times[side].append(dt)
+            if len(times[side]) >= 2 and min(times[side]) > SLOW_RUN_CUTOFF_S:
+                live.remove(side)
+    out: dict = {"errors": {}}
+    for side in runs:
+        out[side] = _summary(times[side]) if times[side] else None
+        if side in stopped:
+            if out[side]:
+                out[side]["stopped"] = stopped[side]
+            else:
+                out["errors"][side] = stopped[side]
+    return out
+
+
+def _noop(df) -> None:
+    df.write.mode("overwrite").format("noop").save()
+
+
+def spark_noop(fn, spark, data_dir: str):
+    """Zero-argument runner of registry query ``fn`` into a noop sink:
+    the timing covers the full physical plan (scan -> shuffle -> sink)
+    without driver-side row serialization skew."""
+    return lambda: _noop(fn(spark, data_dir))
+
+
+def _duck_fetch(con, sql: str | None):
+    """Zero-argument runner of ``sql`` on ``con``, or None without SQL."""
+    return (lambda: con.execute(sql).fetchall()) if sql else None
+
+
+def _warm_up(spark, registry, data_dir: str) -> None:
+    """JVM/codegen warmup on an off-headline query, then several noop
+    jobs: a single warmup under-trains the JIT, and the first headline
+    query (plus the floor itself) absorbs the remainder — measured
+    r3->r4 as a 3x floor swing and a 2.7x phantom agg_groupby
+    regression that vanished in isolation."""
+    _noop(registry["agg_count"].fn(spark, data_dir))
+    for _ in range(4):
+        _noop(spark.range(1))
+
+
+def _floor_1row(spark) -> float:
+    """Plan + schedule + noop-commit of a single-stage 1-row range job:
+    the absolute lower bound on Spark's fixed per-query cost."""
+    return time_pair(lambda: _noop(spark.range(1)), warm=False)["spark"]["min"]
+
+
+def _tabulate(pairs: dict[str, dict], floor_s: float) -> dict:
+    """One section's per-engine maps from its ``{query: time_pair()}``.
+
+    ``ratio_floor_adjusted`` subtracts the fixed per-job floor from
+    Spark's minimum: the scale signal (does the PLAN do more work than
+    DuckDB's) as opposed to the raw ratio (which at sub-second local
+    scale mostly measures JVM job orchestration); clamped at 0 for
+    queries at the floor. A ratio is only as trustworthy as its
+    noisiest side: a pair where either window spreads past 2x is
+    ``unstable``."""
+    sd = {n: p["spark"] for n, p in pairs.items() if p.get("spark")}
+    dd = {n: p["duckdb"] for n, p in pairs.items() if p.get("duckdb")}
+    q = {n: v["min"] for n, v in sd.items()}
+    d = {n: v["min"] for n, v in dd.items()}
+    both = [n for n in d if n in q and d[n] > 0]
     return {
-        "partial_from_progress": True,
-        "queries": timings,
-        "duckdb": dmin,
-        "spark_detail": sparkd,
-        "duckdb_detail": duck,
-        "unstable": unstable,
-        "ratio": {
-            n: round(timings[n] / dmin[n], 2)
-            for n in dmin
-            if dmin[n] > 0 and n in timings
-        },
+        "queries": q,
+        "duckdb": d,
+        "spark_detail": sd,
+        "duckdb_detail": dd,
+        "unstable": sorted(
+            n
+            for n in set(sd) | set(dd)
+            if max(sd.get(n, {}).get("spread", 1.0),
+                   dd.get(n, {}).get("spread", 1.0)) > 2.0
+        ),
+        "ratio": {n: round(q[n] / d[n], 2) for n in both},
         "ratio_floor_adjusted": {
-            n: round(max(timings[n] - floor_s, 0.0) / dmin[n], 2)
-            for n in dmin
-            if dmin[n] > 0 and n in timings
+            n: round(max(q[n] - floor_s, 0.0) / d[n], 2) for n in both
         },
-        "cold_sec": cold,
-        "cold_duckdb_sec": cold_duck,
-        "errors": errors,
+        "errors": {
+            f"{side}:{n}": msg
+            for n, p in pairs.items()
+            for side, msg in (p.get("errors") or {}).items()
+        },
     }
 
 
@@ -1075,7 +1075,7 @@ def _free_bytes(path: str = "/tmp") -> int:
 
 
 def _clean_tmp(
-    patterns=("/tmp/duckdb_bench_tmp",),
+    patterns=(DUCK_TEMP_DIR,),
     min_age_s: float = 600,
     prune_spark_dirs: bool = False,
 ):
@@ -1126,93 +1126,6 @@ def _err(e: Exception) -> str:
     return f"{head} | cause: {cause}" if cause else head
 
 
-def _tree_id() -> str:
-    """Content hash of the benchable tree (engine package + harness +
-    driver entry), commit-independent: ``git ls-files -s`` blob hashes
-    plus any uncommitted diff. Cross-run merging (r13 verdict item 6)
-    is only valid between runs of the IDENTICAL tree — a plan change
-    between runs would let a stale faster min misrepresent the shipped
-    code."""
-    import hashlib
-    import subprocess
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    h = hashlib.md5()
-    try:
-        for cmd in (
-            ["git", "ls-files", "-s", "--", "etl_verkada_spark",
-             "bench.py", "__spark_entry__.py"],
-            ["git", "diff", "--", "etl_verkada_spark", "bench.py",
-             "__spark_entry__.py"],
-        ):
-            out = subprocess.run(
-                cmd, capture_output=True, cwd=here, timeout=30
-            )
-            if out.returncode != 0:
-                return "unknown"
-            h.update(out.stdout)
-        return h.hexdigest()[:12]
-    except Exception:  # noqa: BLE001 - merging is best-effort
-        return "unknown"
-
-
-def _min_intersect(maps: list[dict | None]) -> dict:
-    """Per-key minimum over the keys present in EVERY map — the
-    cross-run min-intersection (r13 verdict item 6: the headline the
-    close-note cites must be the headline the committed record
-    carries; per-run values are retained alongside)."""
-    present = [m for m in maps if m]
-    if len(present) != len(maps) or not present:
-        return {}
-    keys = set(present[0])
-    for m in present[1:]:
-        keys &= set(m)
-    return {k: min(m[k] for m in present) for k in keys}
-
-
-def _min_union(maps: list[dict | None]) -> dict:
-    """Per-key minimum over the keys present in ANY map — the sf1
-    cross-run merge (r15 verdict item 2). Unlike the sf0.1 headline
-    (min-INTERSECTION: every run times every HEADLINE query, and the
-    merged sum must be comparable run-over-run), the sf1 section
-    completes a budget-dependent PREFIX of its pair list per run, so
-    an intersection merge would shrink to the weakest run's coverage;
-    the union lets resume-aware runs accumulate full coverage. Each
-    pair's value is still a same-tree min, so no entry is less honest
-    than a single-run record."""
-    out: dict = {}
-    for m in maps:
-        for k, v in (m or {}).items():
-            if k not in out or v < out[k]:
-                out[k] = v
-    return out
-
-
-def _load_prior_record(repo_detail_path: str, tree_id: str) -> dict:
-    """The previous bench record IF it belongs to the same tree
-    (tree_id mismatch or unknown -> empty: cross-run merging is only
-    valid between runs of the identical tree)."""
-    if tree_id == "unknown":
-        return {}
-    try:
-        with open(repo_detail_path) as f:
-            prev = json.load(f)
-    except (OSError, ValueError):
-        return {}
-    if prev.get("tree_id") != tree_id:
-        return {}
-    return prev
-
-
-def _load_prior_runs(repo_detail_path: str, tree_id: str) -> list[dict]:
-    """Per-run compact records accumulated by earlier bench invocations
-    on the SAME tree (tree_id mismatch or unknown -> no merge)."""
-    runs = _load_prior_record(repo_detail_path, tree_id).get("runs")
-    if isinstance(runs, list) and runs:
-        return runs
-    return []
-
-
 def _host_telemetry() -> dict:
     """Load + free-memory snapshot (r12 verdict item 1: the official
     r12 record was taken on a loaded host and nothing in the record
@@ -1255,8 +1168,7 @@ def compact_stdout_line(
     partial: bool = False,
     floor_1row_s: float | None = None,
     host: dict | None = None,
-    runs_merged: int | None = None,
-    n_current_run: int | None = None,
+    errors: dict | None = None,
 ) -> str:
     """One JSON line <= STDOUT_LINE_BUDGET bytes: the driver contract.
 
@@ -1264,7 +1176,8 @@ def compact_stdout_line(
     unstable extras, then the sf1 ratio dict, then the per-query sf0.1
     timings. The sf0.1 per-query DuckDB ratios never ride the line —
     they are recomputable from queries/duckdb in the detail file; an
-    aggregate ratio scalar stays.
+    aggregate ratio scalar stays. ``errors`` (the sf0.1 section's
+    ``{"engine:query": message}``) rides as a count and its first names.
     """
     sf1_summary: dict | None = None
     if isinstance(sf1, dict):
@@ -1282,13 +1195,6 @@ def compact_stdout_line(
             # in the official record — carry the names (capped) too
             sf1_summary["n_deadline_skipped"] = len(sf1["deadline_skipped"])
             sf1_summary["skipped_q"] = sf1["deadline_skipped"][:8]
-        if sf1.get("deadline_skipped_recheck"):
-            # skips of pairs the accumulated record already covers
-            # (resume-aware ordering, r15 verdict item 2) — a count is
-            # enough, the pairs still carry same-tree measurements
-            sf1_summary["n_skip_recheck"] = len(
-                sf1["deadline_skipped_recheck"]
-            )
         if "free_disk_gb_at_start" in sf1:
             sf1_summary["free_gb"] = round(sf1["free_disk_gb_at_start"], 1)
         if "pairs_md5" in sf1:
@@ -1297,7 +1203,7 @@ def compact_stdout_line(
             sf1_summary["twin_ratio"] = {
                 k: round(v, 1) for k, v in sf1["twin_ratio"].items()
             }
-        if "errors" in sf1:
+        if sf1.get("errors"):
             # named, classed, and capped (r12 verdict item 2: the r12
             # record's `n_errors: 1` was anonymous). Tolerate both the
             # dict form ({query: message}) and a bare name list.
@@ -1363,29 +1269,10 @@ def compact_stdout_line(
         for n in covered
         if duck[n] > 0
     )
-    ratio_median = (
-        round(
-            (
-                per_q[len(per_q) // 2]
-                if len(per_q) % 2
-                else (per_q[len(per_q) // 2 - 1] + per_q[len(per_q) // 2])
-                / 2
-            ),
-            2,
-        )
-        if per_q
-        else None
-    )
+    ratio_median = round(statistics.median(per_q), 2) if per_q else None
     n_gt2x = sum(1 for r in per_q if r > 2.0)
     final = {
-        "metric": (
-            f"headline query wall-clock, noop sink, min-of-{N_RUNS}"
-            + (
-                f", min-intersection of {runs_merged} same-tree runs"
-                if runs_merged
-                else ""
-            )
-        ),
+        "metric": METRIC,
         "value": value,
         "unit": "sec",
         "sf": sf,
@@ -1409,75 +1296,52 @@ def compact_stdout_line(
         "ratio_median_floor_adjusted": ratio_median,
         "n_queries_gt2x": n_gt2x,
         "n_ratio_pairs": len(per_q),
-        # intersection-size transparency (r14 advice): a prior run that
-        # lost a query to a deadline silently shrinks the merged query
-        # set for every later merged record — name both counts so a
-        # shrinking intersection is visible in the stdout record itself
         "pairs_md5": pairs_md5,
         "floor_used": "spark_fixed_overhead_sec",
         "host": host,
         "sf1": sf1_summary,
         "detail_file": detail_path,
     }
-    if runs_merged:
-        # intersection-size transparency (r14 advice): a prior run that
-        # lost a query to a deadline silently shrinks the merged query
-        # set for every later merged record — name both counts so a
-        # shrinking intersection is visible in the stdout record itself
-        final["n_queries_merged"] = len(timings)
-        final["n_queries_current_run"] = n_current_run
+    if errors:
+        final["n_errors"] = len(errors)
+        final["errors"] = sorted(errors)[:6]
     if partial:
         final["partial"] = True
         final.pop("sf1", None)
-    line = json.dumps(final, separators=(",", ":"))
+
+    def too_long() -> bool:
+        return len(json.dumps(final, separators=(",", ":"))) >= (
+            STDOUT_LINE_BUDGET
+        )
+
+    s1 = sf1_summary or {}
     for drop in ("cold", "spark_only"):
-        if len(line) < STDOUT_LINE_BUDGET:
-            break
-        if sf1_summary:
-            sf1_summary.pop(drop, None)
-        line = json.dumps(final, separators=(",", ":"))
+        if too_long():
+            s1.pop(drop, None)
     # error MESSAGES degrade to names before anything else goes — the
     # names are the adjudication payload, the text lives in the detail
-    if len(line) >= STDOUT_LINE_BUDGET and sf1_summary and (
-        sf1_summary.get("errors")
-    ):
-        sf1_summary["errors"] = sorted(sf1_summary["errors"])
-        line = json.dumps(final, separators=(",", ":"))
+    if too_long() and s1.get("errors"):
+        s1["errors"] = sorted(s1["errors"])
     # the unstable list is adjudication-critical (it marks which ratios
     # NOT to trust) — degrade it to a count rather than dropping it
-    if len(line) >= STDOUT_LINE_BUDGET and sf1_summary and (
-        "unstable" in sf1_summary
-    ):
-        sf1_summary["n_unstable"] = len(sf1_summary.pop("unstable"))
-        line = json.dumps(final, separators=(",", ":"))
+    if too_long() and "unstable" in s1:
+        s1["n_unstable"] = len(s1.pop("unstable"))
     # before dropping the sf1 dict wholesale, truncate its ratio map to
     # the WORST entries (they are the adjudication target; sub-1x wins
     # already ride SCALE.md + the detail file) — 5 at a time until fit
-    while (
-        len(line) >= STDOUT_LINE_BUDGET
-        and sf1_summary
-        and len(sf1_summary.get("ratio", {})) > 10
-    ):
-        worst = sorted(
-            sf1_summary["ratio"].items(), key=lambda kv: -kv[1]
-        )[: len(sf1_summary["ratio"]) - 5]
-        sf1_summary["ratio"] = dict(worst)
-        sf1_summary["ratio_truncated"] = True
-        line = json.dumps(final, separators=(",", ":"))
+    while too_long() and len(s1.get("ratio", {})) > 10:
+        worst = sorted(s1["ratio"].items(), key=lambda kv: -kv[1])
+        s1["ratio"] = dict(worst[: len(worst) - 5])
+        s1["ratio_truncated"] = True
     # the floor_bound NAME list exists to tag rows in the worst-N ratio
     # map — once that map is truncated, names outside it are dead bytes
     # (the r13 run-1 line spent ~600 B on 42 names and squeezed the
     # ratio map to 7 entries); keep the full count, trim the names.
-    if sf1_summary and sf1_summary.get("floor_bound") and (
-        sf1_summary.get("ratio_truncated") or len(line) >= STDOUT_LINE_BUDGET
-    ):
-        sf1_summary["n_floor_bound"] = len(sf1_summary["floor_bound"])
-        sf1_summary["floor_bound"] = [
-            n
-            for n in sf1_summary["floor_bound"]
-            if n in sf1_summary.get("ratio", {})
+    if s1.get("floor_bound") and (s1.get("ratio_truncated") or too_long()):
+        s1["n_floor_bound"] = len(s1["floor_bound"])
+        s1["floor_bound"] = [
+            n for n in s1["floor_bound"] if n in s1.get("ratio", {})
         ]
-        line = json.dumps(final, separators=(",", ":"))
     # the per-query sf0.1 timings are the LEAST essential payload: they
     # are fully recomputable from the detail file, while the sf1 ratios
     # are the adjudication target (r5 verdict #1). With 66 headline
@@ -1485,23 +1349,15 @@ def compact_stdout_line(
     # round-9 run-2 line shed the whole sf1 section — so truncate
     # queries (slowest first, they carry the information) and, if ever
     # needed, drop queries BEFORE sf1.
-    while (
-        len(line) >= STDOUT_LINE_BUDGET
-        and len(final.get("queries", {})) > 15
-    ):
-        slowest = sorted(
-            final["queries"].items(), key=lambda kv: -kv[1]
-        )[: len(final["queries"]) - 10]
-        final["queries"] = dict(slowest)
+    while too_long() and len(final.get("queries", {})) > 15:
+        slowest = sorted(final["queries"].items(), key=lambda kv: -kv[1])
+        final["queries"] = dict(slowest[: len(slowest) - 10])
         final["queries_truncated"] = True
-        line = json.dumps(final, separators=(",", ":"))
     for drop in ("queries", "sf1"):
-        if len(line) < STDOUT_LINE_BUDGET:
-            break
-        final.pop(drop, None)
-        final["dropped_for_size"] = final.get("dropped_for_size", []) + [drop]
-        line = json.dumps(final, separators=(",", ":"))
-    return line
+        if too_long():
+            final.pop(drop, None)
+            final.setdefault("dropped_for_size", []).append(drop)
+    return json.dumps(final, separators=(",", ":"))
 
 
 #: timed runs per engine per query at sf1. 3, not the sf0.1 section's
@@ -1520,97 +1376,21 @@ N_RUNS_SF1 = 3
 SF1_DEADLINE_RESERVE_S = 45.0
 
 
-def bench_sf1(
-    spark,
-    registry,
-    src_dir: str,
-    floor_s: float,
-    deadline: float | None = None,
-    run_id: str | None = None,
-    covered: set[str] | None = None,
-) -> dict:
-    """Spark-vs-DuckDB timings for the worst-ratio set at the
-    synthesized sf1 (min-of-N_RUNS_SF1 per engine; dispersion recorded
-    per query).
+def _sf1_results_path() -> str:
+    import tempfile
 
-    Measurement hygiene (r5 verdict #2): refuse to start when free disk
-    is below SF1_MIN_FREE_BYTES; drop DuckDB's spill temp before AND
-    after its pass so it never coexists with Spark shuffle files; and
-    record per-query dispersion — any query whose max/min spread
-    exceeds 2x lands in ``unstable`` and its ratio should be read as
-    unmeasured, not as a result.
+    return os.path.join(tempfile.gettempdir(), "bench_sf1_results.jsonl")
 
-    ``deadline`` (a time.monotonic() timestamp) makes the section
-    degrade PER QUERY instead of being killed wholesale (the round-9
-    rc:124 failure): no new query starts past the deadline minus
-    reserve; everything not reached lands in ``deadline_skipped``; the
-    Spark pass runs DuckDB-paired queries first so whatever time
-    remains completes RATIOS, not orphan absolutes.
 
-    ``covered`` (r15 verdict item 2 — resume-aware ordering): pair
-    names that already carry a same-tree measurement in the
-    accumulated record. Not-yet-covered pairs run FIRST (within the
-    existing evidence ordering), so successive default-budget runs
-    accumulate full coverage instead of re-measuring the same prefix;
-    a deadline skip of an already-covered pair is recorded under
-    ``deadline_skipped_recheck`` (the record still has a same-tree
-    number for it), keeping ``deadline_skipped`` = genuinely missing
-    measurements."""
+def _sf1_pairs(spark, registry, sf1_dir: str, deadline: float, write) -> None:
+    """Time the sf1 pair lists, writing each finished pair at once.
 
-    def over_deadline(reserve: float = SF1_DEADLINE_RESERVE_S) -> bool:
-        return deadline is not None and time.monotonic() > deadline - reserve
-
-    covered = covered or set()
-    #: fresh-first iteration order (stable within each group)
-    sf1_order_all = [n for n in SF1_QUERIES if n not in covered] + [
-        n for n in SF1_QUERIES if n in covered
-    ]
-
-    sf1_dir = ensure_sf1(spark, src_dir)
-    errors: dict[str, str] = {}
-    skipped_deadline: list[str] = []
-    skipped_recheck: list[str] = []
-
-    def skip(tag: str, name: str) -> None:
-        (skipped_recheck if name in covered else skipped_deadline).append(
-            f"{tag}:{name}"
-        )
-    _clean_tmp()
-    free0 = _free_bytes()
-    if free0 < SF1_MIN_FREE_BYTES:
-        return {
-            "skipped": "insufficient_disk",
-            "free_gb": round(free0 / 1024**3, 1),
-            "needed_gb": round(SF1_MIN_FREE_BYTES / 1024**3, 1),
-        }
-
-    # DuckDB FIRST: its big window sorts spill multi-GB temp; running
-    # them before Spark's sf1 queries means that spill never coexists
-    # with Spark's accumulated shuffle files (the combination filled
-    # the disk and killed this section in two round-5 runs). Errors are
-    # captured PER QUERY so one failure cannot erase the section.
-    #
-    # The duck pass is additionally capped at HALF the remaining
-    # deadline: when first-time fixture synthesis has eaten most of the
-    # budget, a full-budget duck pass leaves the Spark pass NOTHING and
-    # the record ends up all-denominator/no-numerator (this round's
-    # run 2: 64 duck rows, 0 spark rows). Half/half guarantees complete
-    # RATIO pairs for whatever prefix of SF1_QUERIES fits; the Spark
-    # pass runs duck-paired queries first, so the pairs line up.
-    duck_deadline = deadline
-    if deadline is not None:
-        duck_deadline = min(
-            deadline, time.monotonic() + (deadline - time.monotonic()) / 2
-        )
-
-    def duck_over_deadline(reserve: float = SF1_DEADLINE_RESERVE_S) -> bool:
-        return (
-            duck_deadline is not None
-            and time.monotonic() > duck_deadline - reserve
-        )
-
-    duck: dict[str, float] = {}
-    cold_duck: dict[str, float] = {}
+    SF1_QUERIES runs in its degradation-aware order, then the
+    Spark-only rows, then the one-run cold rows: no pair starts inside
+    SF1_DEADLINE_RESERVE_S of ``deadline`` (a ``time.monotonic()``
+    stamp), so the section degrades pair by pair instead of being killed
+    wholesale (the round-9 rc:124 failure), and each pair's DuckDB
+    budget is cut to the time left."""
     con = _duck_connect()
     # cap the comparison engine's memory: its default (80% of RAM)
     # overlaps the Spark JVM's heap on this shared box; 32 GB trades a
@@ -1622,202 +1402,157 @@ def bench_sf1(
                 t=t, p=f"{sf1_dir}/{t}.parquet/*.parquet"
             )
         )
-    # every completed measurement is APPENDED to the progress file the
-    # moment it exists: the round-9 run proved that an end-only write
-    # loses 90 minutes of data to a subprocess timeout
-    progress = _sf1_progress_path()
-    try:
-        os.unlink(progress)
-    except OSError:
-        pass
-
-    def _record(kind: str, name: str, payload) -> None:
-        with open(progress, "a") as f:
-            f.write(json.dumps({"k": kind, "q": name, "v": payload}) + "\n")
-
-    if run_id is not None:
-        _record("run_id", "run_id", run_id)
-    _record("floor", "floor_s", floor_s)
-
     overrides = _sf1_sql_overrides()
-    duck_detail: dict[str, dict] = {}
-    for name in sf1_order_all:
-        sql = overrides.get(name) or registry[name].oracle
-        if not sql:
+    plan = [(n, False) for n in SF1_QUERIES + SF1_SPARK_ONLY]
+    plan += [(n, True) for n in SF1_COLD_QUERIES]
+    for name, cold in plan:
+        left = deadline - SF1_DEADLINE_RESERVE_S - time.monotonic()
+        if left <= 0:
+            write({"q": name, "skipped": "deadline"})
             continue
-        if duck_over_deadline():
-            skip("duckdb", name)
-            continue
-        budget = SF1_DUCK_BUDGET_OVERRIDES.get(
-            name, SF1_DUCK_QUERY_BUDGET_S
+        sql = None
+        if name not in SF1_SPARK_ONLY:
+            sql = overrides.get(name) or registry[name].oracle
+        pair = time_pair(
+            spark_noop(registry[name].fn, spark, sf1_dir),
+            _duck_fetch(con, sql),
+            con.interrupt,
+            n_runs=1 if cold else N_RUNS_SF1,
+            duck_budget_s=min(
+                SF1_DUCK_BUDGET_OVERRIDES.get(name, DUCK_QUERY_BUDGET_S),
+                max(left, 5.0),
+            ),
+            warm=not cold,
         )
-        if duck_deadline is not None:
-            budget = min(
-                budget,
-                max(
-                    duck_deadline
-                    - time.monotonic()
-                    - SF1_DEADLINE_RESERVE_S,
-                    5.0,
-                ),
-            )
-        try:
-            duck_detail[name] = run_duckdb_budgeted(
-                con, sql, n_runs=N_RUNS_SF1, budget_s=budget
-            )
-            duck[name] = duck_detail[name]["min"]
-            _record("duckdb", name, duck_detail[name])
-        except Exception as e:  # noqa: BLE001 - record and continue
-            errors[f"duckdb:{name}"] = _err(e)
-            _record("error", f"duckdb:{name}", _err(e))
-    # warm-retry protocol (r13 verdict item 5): a pair flagged unstable
-    # by ONE polluted 3-run window often measures clean immediately
-    # after — give every >2x-spread duck window one more (already-warm)
-    # window and keep whichever has the smaller spread (tie: smaller
-    # min). "unstable" should mean "unmeasurable this session", not
-    # "the scheduler hiccuped once".
-    for name in [
-        n for n in sf1_order_all
-        if duck_detail.get(n, {}).get("spread", 1.0) > 2.0
-    ]:
-        if duck_over_deadline():
-            break
-        sql = overrides.get(name) or registry[name].oracle
-        try:
-            retry = run_duckdb_budgeted(
-                con, sql, n_runs=N_RUNS_SF1,
-                budget_s=SF1_DUCK_BUDGET_OVERRIDES.get(
-                    name, SF1_DUCK_QUERY_BUDGET_S
-                ),
-            )
-        except Exception:  # noqa: BLE001 - keep the first window
-            continue
-        old = duck_detail[name]
-        if (retry["spread"], retry["min"]) < (old["spread"], old["min"]):
-            retry["retried"] = True
-            duck_detail[name] = retry
-            duck[name] = retry["min"]
-            _record("duckdb", name, retry)
-    for name in SF1_COLD_QUERIES:
-        sql = registry[name].oracle
-        if sql:
-            if duck_over_deadline():
-                skip("duckdb_cold", name)
-                continue
-            try:
-                t0 = time.perf_counter()
-                con.execute(sql).fetchall()
-                cold_duck[name] = round(time.perf_counter() - t0, 3)
-                _record("duckdb_cold", name, cold_duck[name])
-            except Exception as e:  # noqa: BLE001
-                errors[f"duckdb_cold:{name}"] = _err(e)
-                _record("error", f"duckdb_cold:{name}", _err(e))
+        write({"q": name, "cold": cold, **pair})
     con.close()
-    # DuckDB's pass is over: its spill temp must not share the disk
-    # with Spark's sf1 shuffle files (the r5 ENOSPC cause).
     _clean_tmp()
 
-    timings: dict[str, float] = {}
-    spark_detail: dict[str, dict] = {}
-    # ratio-completing order: queries whose DuckDB twin finished first,
-    # then the rest — a deadline mid-pass costs absolutes, not pairs
-    # (fresh-first within each group, same as the duck pass)
-    spark_order = [n for n in sf1_order_all if n in duck] + [
-        n for n in sf1_order_all if n not in duck
-    ] + SF1_SPARK_ONLY
-    for name in spark_order:
-        if over_deadline():
-            skip("spark", name)
-            continue
-        try:
-            spark_detail[name] = run_spark(
-                registry[name].fn, spark, sf1_dir, n_runs=N_RUNS_SF1
-            )
-            timings[name] = spark_detail[name]["min"]
-            _record("spark", name, spark_detail[name])
-        except Exception as e:  # noqa: BLE001
-            errors[f"spark:{name}"] = _err(e)
-            _record("error", f"spark:{name}", _err(e))
-    # spark-side warm-retry (same protocol as the duck pass above)
-    for name in [
-        n for n in spark_order
-        if spark_detail.get(n, {}).get("spread", 1.0) > 2.0
-    ]:
-        if over_deadline():
-            break
-        try:
-            retry = run_spark(
-                registry[name].fn, spark, sf1_dir, n_runs=N_RUNS_SF1
-            )
-        except Exception:  # noqa: BLE001 - keep the first window
-            continue
-        old = spark_detail[name]
-        if (retry["spread"], retry["min"]) < (old["spread"], old["min"]):
-            retry["retried"] = True
-            spark_detail[name] = retry
-            timings[name] = retry["min"]
-            _record("spark", name, retry)
-    cold: dict[str, float] = {}
-    for name in SF1_COLD_QUERIES:
-        if over_deadline():
-            skip("spark_cold", name)
-            continue
-        try:
-            t0 = time.perf_counter()
-            registry[name].fn(spark, sf1_dir).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            cold[name] = round(time.perf_counter() - t0, 3)
-            _record("spark_cold", name, cold[name])
-        except Exception as e:  # noqa: BLE001
-            errors[f"spark_cold:{name}"] = _err(e)
-            _record("error", f"spark_cold:{name}", _err(e))
-    # a ratio is only as trustworthy as its noisiest side: flag any
-    # pair where either engine's window spread exceeds 2x
-    unstable = sorted(
-        n
-        for n in set(spark_detail) | set(duck_detail)
-        if max(
-            spark_detail.get(n, {}).get("spread", 1.0),
-            duck_detail.get(n, {}).get("spread", 1.0),
-        )
-        > 2.0
+
+def sf1_main(
+    sf_dir: str,
+    results_path: str,
+    deadline_s: float | None = None,
+    run_id: str | None = None,
+) -> None:
+    """Entry point of the sf1 section's child process. It runs in a
+    FRESH JVM: the r6 full run lost 31 of 34 sf1 queries because one
+    heavy query wedged the then-1000-stage-old shared JVM and every
+    later task died with "Lost task" — fault isolation plus a clean
+    heap is worth the ~30 s of warmup.
+
+    Appends one JSON line per record to ``results_path``: first the
+    ``run_id`` stamp, then the floor, the free disk, one line per
+    finished or skipped pair, and the closing host sample. The parent
+    builds the section from that file (``_sf1_section``) whether this
+    process exits cleanly or dies; stdout stays silent.
+
+    ``deadline_s`` is the wall budget from THIS entry point (session
+    startup, warmup, first-time sf1 synthesis and the pairs)."""
+    deadline = time.monotonic() + (
+        deadline_s if deadline_s is not None else float("inf")
     )
-    out = {
+
+    def write(rec: dict) -> None:
+        with open(results_path, "a") as f:
+            f.write(json.dumps(rec) + "\n")
+
+    write({"run_id": run_id, "host_start": _host_telemetry(),
+           "deadline_s": deadline_s})
+    try:
+        registry = build_registry()
+        # the parent stopped its session before spawning us, so its
+        # scratch dirs are dead; prune BEFORE creating our own session
+        # (age guard kept: never touch dirs of unrelated live Spark
+        # processes)
+        _clean_tmp(prune_spark_dirs=True)
+        spark = get_spark("etl-verkada-spark-bench-sf1")
+        _warm_up(spark, registry, sf_dir)
+        write({"floor_s_subprocess": _floor_1row(spark)})
+        sf1_dir = ensure_sf1(spark, sf_dir)
+        _clean_tmp()
+        free = _free_bytes()
+        if free < SF1_MIN_FREE_BYTES:
+            write({
+                "skipped": "insufficient_disk",
+                "free_gb": round(free / 1024**3, 1),
+                "needed_gb": round(SF1_MIN_FREE_BYTES / 1024**3, 1),
+            })
+        else:
+            write({"free_disk_gb_at_start": round(free / 1024**3, 1)})
+            _sf1_pairs(spark, registry, sf1_dir, deadline, write)
+    except Exception as e:  # noqa: BLE001 - report, never crash silently
+        write({"error": _err(e)})
+    write({"host_end": _host_telemetry()})
+
+
+def _sf1_section(path: str, run_id: str, err: str | None = None) -> dict:
+    """The sf1 section, built from the child's results file — the one
+    path for a clean exit and a dead child alike, so a file cut short
+    mid-run still yields every pair that finished (the round-9 failure
+    mode: a 5400 s timeout erased 90 minutes of completed measurements).
+    ``err`` describes an abnormal child exit and is kept under
+    ``errors["section"]``.
+
+    The first line must carry this run's ``run_id``: the parent unlinks
+    the file before spawning, but a child that died before its first
+    write must not publish an EARLIER run's file as its own."""
+    recs: list[dict] = []
+    try:
+        with open(path) as f:
+            for ln in f:
+                try:
+                    recs.append(json.loads(ln))
+                except ValueError:  # the line the child's death cut
+                    pass
+    except OSError:
+        return {"error": err or "no sf1 results file"}
+    if not recs or recs[0].get("run_id") != run_id:
+        return {"error": err or "stale sf1 results file",
+                "stale_progress_rejected": True}
+    sec: dict = {}
+    pairs: dict[str, dict] = {}
+    cold: dict[str, dict] = {}
+    skipped: list[str] = []
+    for r in recs:
+        if "q" not in r:
+            sec.update(r)
+        elif r.get("skipped"):
+            skipped.append(r["q"])
+        else:
+            (cold if r.get("cold") else pairs)[r["q"]] = r
+    if "skipped" in sec:
+        return sec
+    floor_s = sec.get("floor_s_subprocess", 0.0)
+    sec.update(_tabulate(pairs, floor_s))
+    cold_t = _tabulate(cold, floor_s)
+    for key, msg in cold_t["errors"].items():
+        sec["errors"][key.replace(":", "_cold:", 1)] = msg
+    if err:
+        sec["errors"]["section"] = err
+    # twin-denominator pairs leave the ratio maps for twin_ratio (see
+    # SF1_TWIN_EXCLUDED)
+    sec["twin_ratio"] = {
+        n: sec["ratio_floor_adjusted"].pop(n)
+        for n in SF1_TWIN_EXCLUDED
+        if n in sec["ratio_floor_adjusted"]
+    }
+    for n in SF1_TWIN_EXCLUDED:
+        sec["ratio"].pop(n, None)
+    if skipped:
+        sec["deadline_skipped"] = skipped
+    import hashlib
+
+    sec.update({
         "replicas_of_sf0.1": SF1_REPLICAS,
         "table_replica_overrides": SF1_TABLE_REPLICAS,
-        "free_disk_gb_at_start": round(free0 / 1024**3, 1),
-        "queries": timings,
-        "duckdb": duck,
-        "spark_detail": spark_detail,
-        "duckdb_detail": duck_detail,
-        "unstable": unstable,
-        "ratio": {
-            n: round(timings[n] / duck[n], 2)
-            for n in duck
-            if duck[n] > 0 and n in timings
-            and n not in SF1_TWIN_EXCLUDED
-        },
-        "ratio_floor_adjusted": {
-            n: round(max(timings[n] - floor_s, 0.0) / duck[n], 2)
-            for n in duck
-            if duck[n] > 0 and n in timings
-            and n not in SF1_TWIN_EXCLUDED
-        },
-        # measured but aggregate-excluded (twin denominator, see
-        # SF1_TWIN_EXCLUDED): the honest number, outside the averages
-        "twin_ratio": {
-            n: round(max(timings[n] - floor_s, 0.0) / duck[n], 2)
-            for n in SF1_TWIN_EXCLUDED
-            if n in duck and duck[n] > 0 and n in timings
-        },
-        "cold_sec": cold,
-        "cold_duckdb_sec": cold_duck,
+        "cold_sec": cold_t["queries"],
+        "cold_duckdb_sec": cold_t["duckdb"],
         "spark_only": {
-            n: timings[n] for n in SF1_SPARK_ONLY if n in timings
+            n: sec["queries"][n] for n in SF1_SPARK_ONLY if n in sec["queries"]
         },
         "sql_overrides": sorted(
-            n for n in _sf1_sql_overrides() if n in duck
+            n for n in _sf1_sql_overrides() if n in sec["duckdb"]
         ),
         "twin_excluded": SF1_TWIN_EXCLUDED,
         # include sf0.1-only benched rows too (r15: the prefixfilter /
@@ -1827,88 +1562,16 @@ def bench_sf1(
         "annotations": {
             n: note
             for n, note in SF1_ANNOTATIONS.items()
-            if n in timings or n in duck or n in HEADLINE
+            if n in sec["queries"] or n in sec["duckdb"] or n in HEADLINE
         },
         "n_runs": N_RUNS_SF1,
-    }
-    # pin the pair set the sf1 aggregates are computed over (verdict
-    # item 7: like-for-like round-over-round comparison)
-    import hashlib
-
-    out["pairs_md5"] = hashlib.md5(
-        ",".join(sorted(out["ratio_floor_adjusted"])).encode()
-    ).hexdigest()[:10]
-    if skipped_deadline:
-        out["deadline_skipped"] = skipped_deadline
-    if skipped_recheck:
-        out["deadline_skipped_recheck"] = skipped_recheck
-    if covered:
-        out["n_covered_by_prior_runs"] = len(covered)
-    if errors:
-        out["errors"] = errors
-    return out
-
-
-def sf1_main(
-    sf_dir: str,
-    out_path: str,
-    deadline_s: float | None = None,
-    run_id: str | None = None,
-) -> None:
-    """Entry point for the sf1 section's isolated subprocess (fresh JVM;
-    see main() for why). Writes the bench_sf1 dict as JSON to out_path;
-    stdout stays silent so the parent's driver contract is untouched.
-
-    ``deadline_s`` is the wall budget measured from THIS entry point
-    (it covers session startup, warmup, first-time sf1 synthesis and
-    the measurement passes): bench_sf1 degrades per-query as it nears
-    and the result file is ALWAYS written — the parent should never
-    need its subprocess-timeout kill."""
-    deadline = (
-        time.monotonic() + deadline_s if deadline_s is not None else None
-    )
-    host_start = _host_telemetry()
-    # resume-aware ordering (r15 verdict item 2): the parent passes the
-    # already-covered pair names of the accumulated same-tree record
-    covered = {
-        n
-        for n in os.environ.get("SPARK_GRAFT_SF1_COVERED", "").split(",")
-        if n
-    }
-    registry = build_registry()
-    # the parent stopped its session before spawning us, so its scratch
-    # dirs are dead; prune BEFORE creating our own session (age guard
-    # kept: never touch dirs of unrelated live Spark processes)
-    _clean_tmp(prune_spark_dirs=True)
-    spark = get_spark("etl-verkada-spark-bench-sf1")
-    # same warmup + floor protocol as the sf0.1 section
-    registry["agg_count"].fn(spark, sf_dir).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    for _ in range(4):
-        spark.range(1).write.mode("overwrite").format("noop").save()
-    floor_s = float("inf")
-    for _ in range(5):
-        t0 = time.perf_counter()
-        spark.range(1).write.mode("overwrite").format("noop").save()
-        floor_s = min(floor_s, time.perf_counter() - t0)
-    floor_s = round(floor_s, 3)
-    try:
-        res = bench_sf1(
-            spark, registry, sf_dir, floor_s, deadline=deadline,
-            run_id=run_id, covered=covered,
-        )
-    except Exception as e:  # noqa: BLE001 - report, never crash silently
-        # _err already leads with the class name — no second prefix
-        # (ADVICE r13: "ValueError: ValueError: ..." wasted line bytes)
-        res = {"error": _err(e)}
-    res["floor_s_subprocess"] = floor_s
-    res["host_start"] = host_start
-    res["host_end"] = _host_telemetry()
-    if deadline_s is not None:
-        res["deadline_s"] = round(deadline_s, 1)
-    with open(out_path, "w") as f:
-        json.dump(res, f)
+        # pin the pair set the sf1 aggregates are computed over (verdict
+        # item 7: like-for-like round-over-round comparison)
+        "pairs_md5": hashlib.md5(
+            ",".join(sorted(sec["ratio_floor_adjusted"])).encode()
+        ).hexdigest()[:10],
+    })
+    return sec
 
 
 #: whole-bench wall budget (seconds). The driver kills the bench
@@ -1921,6 +1584,57 @@ def sf1_main(
 BENCH_BUDGET_S = 2700.0
 
 
+def _run_sf1(sf_dir: str, budget: float, elapsed: float) -> dict:
+    """Run the sf1 section in its child process; build it from the
+    child's results file however the child ended."""
+    import subprocess
+    import uuid
+
+    # the sf1 section gets whatever the whole-bench budget has left,
+    # minus margin to assemble + print the final line; the child
+    # degrades per pair against this deadline — the subprocess timeout
+    # below is a last-resort backstop, not the control mechanism
+    # (round 9's control-by-kill lost the ratios).
+    deadline_s = min(
+        budget - elapsed - 120.0,
+        float(os.environ.get("SPARK_GRAFT_SF1_TIMEOUT", "3300")),
+    )
+    if deadline_s < 240.0:
+        return {
+            "skipped": "no_time",
+            "budget_s": budget,
+            "elapsed_before_sf1_s": round(elapsed, 1),
+        }
+    run_id = uuid.uuid4().hex[:12]
+    path = _sf1_results_path()
+    try:
+        os.unlink(path)
+    except OSError:
+        pass
+    err = None
+    try:
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--sf1-only",
+             sf_dir, path, f"{deadline_s:.0f}", run_id],
+            capture_output=True,
+            text=True,
+            timeout=deadline_s + 180,
+        )
+        if proc.returncode:
+            err = f"sf1 subprocess rc={proc.returncode}: {proc.stderr[-400:]}"
+    except (OSError, subprocess.SubprocessError) as e:
+        err = f"{type(e).__name__}: {e}"
+    return _sf1_section(path, run_id, err)
+
+
+def _mirrors_to_repo(sf: str, sf1: dict | None) -> bool:
+    """Whether a run's record replaces ./BENCH_FULL.json: only a run at
+    HEADLINE_SF whose sf1 section measured pairs, so a smoke run at
+    another sf, or a run without sf1, can never overwrite the last full
+    record."""
+    return sf == HEADLINE_SF and bool((sf1 or {}).get("ratio_floor_adjusted"))
+
+
 def main() -> None:
     t_start = time.monotonic()
     budget = float(
@@ -1928,6 +1642,9 @@ def main() -> None:
     )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    detail_path = os.environ.get(
+        "SPARK_GRAFT_BENCH_DETAIL", "/tmp/bench_full.json"
+    )
     registry = build_registry()
     # drop scratch left by prior rounds (DuckDB spill temp, dead Spark
     # local dirs) before any timing — stale files were half the r5
@@ -1936,25 +1653,14 @@ def main() -> None:
     _clean_tmp(prune_spark_dirs=True)
     host_start = _host_telemetry()
     spark = get_spark("etl-verkada-spark-bench")
-
-    # JVM/codegen warmup on an off-headline query, then several noop
-    # jobs: a single warmup under-trains the JIT, and the first headline
-    # query (plus the floor itself) absorbs the remainder — measured
-    # r3->r4 as a 3x floor swing and a 2.7x phantom agg_groupby
-    # regression that vanished in isolation.
-    registry["agg_count"].fn(spark, sf_dir).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    for _ in range(4):
-        spark.range(1).write.mode("overwrite").format("noop").save()
+    _warm_up(spark, registry, sf_dir)
 
     # fixed per-query floor, TWO probes (r11 — the r10 record's 1-row
     # probe measured 0.025 s while the CHEAPEST real headline query was
     # 0.152 s, so "floor-adjusted" ratios at sf0.1 still mostly priced
     # harness fixed cost, not plans):
-    # * floor_1row — plan + schedule + noop-commit a single-stage 1-row
-    #   range job: the absolute lower bound, kept for cross-round
-    #   comparability;
+    # * floor_1row — _floor_1row: the absolute lower bound, kept for
+    #   cross-round comparability;
     # * floor (used for adjustment) — the same min-of-5 over a REAL
     #   minimal query: scan the 5-row region parquet through the
     #   catalog, one hash aggregate, noop sink. Two stages, a parquet
@@ -1962,106 +1668,37 @@ def main() -> None:
     #   headline query pays before touching data. DuckDB's side is not
     #   floor-adjusted at all (its fixed cost stays in its timings), so
     #   the comparison remains conservative.
-    from etl_verkada_spark.catalog import table as _cat_table
+    from pyspark.sql import functions as F
 
-    def measure_floor_1row(n: int = 5) -> float:
-        best = float("inf")
-        for _ in range(n):
-            t0 = time.perf_counter()
-            spark.range(1).write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        return best
+    from etl_verkada_spark.catalog import table
 
-    def measure_floor(n: int = 5) -> float:
-        from pyspark.sql import functions as _F
+    def floor() -> float:
+        def run() -> None:
+            region = table(spark, sf_dir, "region")
+            _noop(region.groupBy().agg(F.count(F.lit(1)).alias("n")))
 
-        best = float("inf")
-        for _ in range(n):
-            t0 = time.perf_counter()
-            _cat_table(spark, sf_dir, "region").groupBy().agg(
-                _F.count(_F.lit(1)).alias("n")
-            ).write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        return best
+        return time_pair(run, warm=False)["spark"]["min"]
 
-    floor_1row_s = measure_floor_1row()
-    floor_s = measure_floor()
-
-    timings: dict[str, float] = {}
-    spark_detail: dict[str, dict] = {}
-    for name in HEADLINE:
-        spark_detail[name] = run_spark(registry[name].fn, spark, sf_dir)
-        timings[name] = spark_detail[name]["min"]
-
+    floor_1row_s, floor_s = _floor_1row(spark), floor()
+    con = _duck_connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    pairs = {
+        name: time_pair(
+            spark_noop(registry[name].fn, spark, sf_dir),
+            _duck_fetch(con, registry[name].oracle),
+            con.interrupt,
+        )
+        for name in HEADLINE
+    }
+    con.close()
     # floor re-measured at full steady state; keep the smaller — the
     # floor is a LOWER bound on fixed overhead, so the min is the
     # honest estimate (an inflated floor flatters every ratio).
-    floor_s = round(min(floor_s, measure_floor()), 3)
-    floor_1row_s = round(min(floor_1row_s, measure_floor_1row()), 3)
-
-    duck: dict[str, float] = {}
-    duck_detail: dict[str, dict] = {}
-    canary: dict = {}
-    try:
-        import duckdb
-
-        con = _duck_connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-            )
-        for name in HEADLINE:
-            sql = registry[name].oracle
-            if sql:
-                duck_detail[name] = run_duckdb(con, sql)
-                duck[name] = duck_detail[name]["min"]
-        # warm canary (r12 verdict item 1): re-time ONE already-warm
-        # pair at section end. Its drift vs the recorded min is the
-        # in-record host-bias detector — Spark drifting while DuckDB
-        # holds (the r12 signature: +30-400% vs +5%) marks the run
-        # contended, not the code regressed.
-        cq = "flagship_flat"
-        if timings.get(cq) and duck.get(cq):
-            c_s = run_spark(registry[cq].fn, spark, sf_dir, n_runs=3)
-            c_d = run_duckdb(con, registry[cq].oracle, n_runs=3)
-            canary = {
-                "q": cq,
-                "spark_drift": round(c_s["min"] / timings[cq], 2),
-                "duckdb_drift": round(c_d["min"] / duck[cq], 2),
-            }
-    except Exception:
-        pass
-
-    # ratio with the fixed per-job floor subtracted: the scale signal
-    # (does the PLAN do more work than DuckDB's) as opposed to the raw
-    # ratio (which at sub-second local scale mostly measures JVM job
-    # orchestration). Clamped at 0 for queries at the floor.
-    ratios = {
-        n: round(max(timings[n] - floor_s, 0.0) / duck[n], 2)
-        for n in duck
-        if duck[n] > 0
-    }
-
-    headline = {
-        "metric": (
-            f"headline query wall-clock, noop sink, min-of-{N_RUNS}"
-        ),
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "duckdb": duck,
-        "spark_fixed_overhead_sec": floor_s,
-        "spark_fixed_overhead_1row_sec": floor_1row_s,
-        "ratio_floor_adjusted": ratios,
-        "sf1": "pending",
-        # tagged so a first-JSON-line consumer cannot mistake this for
-        # the final record (ADVICE r5 #3)
-        "partial": True,
-    }
-    # the sf1 section runs for tens of minutes; print (and flush) a
-    # COMPACT headline line FIRST so a harness timeout mid-sf1 still
-    # records a parseable sf0.1 record — the final line supersedes it.
+    floor_s = min(floor_s, floor())
+    floor_1row_s = min(floor_1row_s, _floor_1row(spark))
+    rec = _tabulate(pairs, floor_s)
+    value = round(sum(rec["queries"].values()), 3)
     host = {
         "load1": [host_start.get("load1"), _host_telemetry().get("load1")],
         "mem_gb": [
@@ -2069,268 +1706,53 @@ def main() -> None:
             _host_telemetry().get("mem_avail_gb"),
         ],
     }
-    if canary:
-        host["canary"] = canary
-    print(
-        compact_stdout_line(
-            headline["value"], sf, timings, floor_s, duck, None,
-            os.environ.get("SPARK_GRAFT_BENCH_DETAIL", "/tmp/bench_full.json"),
-            partial=True,
-            floor_1row_s=floor_1row_s,
-            host=host,
-        ),
-        flush=True,
-    )
 
-    # sf1 crossover section (disable with SPARK_GRAFT_SF1=0); never let
-    # it break the headline JSON line. It runs in a FRESH SUBPROCESS
-    # (own JVM): the r6 full run lost 31 of 34 sf1 queries because one
-    # heavy query wedged the then-1000-stage-old shared JVM and every
-    # later task died with "Lost task" — fault isolation plus a clean
-    # heap is worth the ~30 s of subprocess warmup.
-    # tree identity + accumulated same-tree record, resolved BEFORE the
-    # sf1 subprocess so its pair ordering can be resume-aware (r15
-    # verdict item 2): pairs with no same-tree measurement yet run
-    # first in the child.
-    tree_id = _tree_id()
-    repo_detail = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-    )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
-    prior_record = _load_prior_record(repo_detail, tree_id)
-    prior_runs = prior_record.get("runs") or []
-    # cross-run merging additionally requires same sf AND same cpus
-    # (r15 verdict item 2 / what's-wrong #4: the r15 working-tree
-    # record min-merged a 32-core and an 8-core run of the same sf).
-    # Runs that predate the cpus field never merge (tree_id changes
-    # with bench.py anyway, so none exist in practice).
-    merge_runs = [
-        r
-        for r in prior_runs
-        if r.get("sf") == sf and r.get("cpus") == cpus
-    ]
-    covered_pairs = sorted(
-        set(_min_union([r.get("sf1_queries") for r in merge_runs]))
-        & set(_min_union([r.get("sf1_duckdb") for r in merge_runs]))
-    )
+    def line(sf1: dict | None, partial: bool) -> str:
+        return compact_stdout_line(
+            value, sf, rec["queries"], floor_s, rec["duckdb"], sf1,
+            detail_path, partial=partial, floor_1row_s=floor_1row_s,
+            host=host, errors=rec["errors"],
+        )
+
+    # the sf1 section runs for tens of minutes; print (and flush) a
+    # COMPACT headline line FIRST so a harness timeout mid-sf1 still
+    # records a parseable sf0.1 record — the final line supersedes it.
+    print(line(None, partial=True), flush=True)
 
     sf1: dict | None = None
     if os.environ.get("SPARK_GRAFT_SF1", "1") != "0":
-        spark.stop()  # free the 16g heap + shuffle dirs for the child
-        import subprocess
-        import tempfile
-        import uuid
-
-        # the sf1 section gets whatever the whole-bench budget has
-        # left, minus margin to assemble + print the final line; the
-        # child degrades per-query against this deadline and writes
-        # its result file itself — the subprocess timeout below is a
-        # last-resort backstop, not the control mechanism (round 9's
-        # control-by-kill lost the ratios).
-        elapsed = time.monotonic() - t_start
-        deadline_s = min(
-            budget - elapsed - 120.0,
-            float(os.environ.get("SPARK_GRAFT_SF1_TIMEOUT", "3300")),
-        )
-        run_id = uuid.uuid4().hex[:12]
-        # stale-progress guard, belt half (ADVICE r9): a file from a
-        # previous run must be gone before the child can die early
-        try:
-            os.unlink(_sf1_progress_path())
-        except OSError:
-            pass
-        out_path = os.path.join(tempfile.gettempdir(), "bench_sf1_result.json")
-        try:
-            os.unlink(out_path)
-        except OSError:
-            pass
-        if deadline_s < 240.0:
-            sf1 = {
-                "skipped": "no_time",
-                "budget_s": budget,
-                "elapsed_before_sf1_s": round(elapsed, 1),
-            }
-        else:
-            try:
-                child_env = dict(os.environ)
-                child_env["SPARK_GRAFT_SF1_COVERED"] = ",".join(
-                    covered_pairs
-                )
-                proc = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__), "--sf1-only",
-                     sf_dir, out_path, f"{deadline_s:.0f}", run_id],
-                    capture_output=True,
-                    text=True,
-                    timeout=deadline_s + 180,
-                    env=child_env,
-                )
-                if os.path.exists(out_path):
-                    with open(out_path) as f:
-                        sf1 = json.load(f)
-                else:
-                    sf1 = _sf1_from_progress(
-                        f"sf1 subprocess rc={proc.returncode}: "
-                        f"{proc.stderr[-400:]}",
-                        run_id,
-                    )
-            except Exception as e:  # noqa: BLE001
-                sf1 = _sf1_from_progress(f"{type(e).__name__}: {e}", run_id)
-
-    # -- driver contract (r5 verdict #1): the FINAL stdout line must fit
-    # the driver's ~4 KB tail capture (BENCH_r02-r05 were parsed:null
-    # because the full record outgrew it). Full detail goes to a file;
-    # the final line carries the headline numbers + the sf1 SUMMARY.
+        spark.stop()  # free the heap + shuffle dirs for the child
+        sf1 = _run_sf1(sf_dir, budget, time.monotonic() - t_start)
     host["load1"][1] = _host_telemetry().get("load1")
     host["mem_gb"][1] = _host_telemetry().get("mem_avail_gb")
-
-    # -- cross-run min-intersection (r13 verdict item 6): earlier runs
-    # of the IDENTICAL tree (content-hashed) accumulate in the repo
-    # detail file; the headline this run emits is the per-pair minimum
-    # over the intersection of completed pairs across ALL runs, so the
-    # committed stdout record IS the multi-run number the close-note
-    # cites. Per-run values stay in the detail under "runs"; a pair is
-    # flagged unstable only if it looked unstable in EVERY run (more
-    # samples -> fewer false flags, r13 verdict item 5).
-    sf1_is_dict = isinstance(sf1, dict)
-    cur_run = {
-        "sf": sf,
-        "cpus": cpus,
-        "value": headline["value"],
-        "queries": timings,
-        "duckdb": duck,
-        "floor_s": floor_s,
-        "host": host,
-        "sf1_queries": sf1.get("queries") if sf1_is_dict else None,
-        "sf1_duckdb": sf1.get("duckdb") if sf1_is_dict else None,
-        "sf1_unstable": sf1.get("unstable") if sf1_is_dict else None,
-    }
-    # same-SCALE same-CPUS guard: a smoke run at another sf shares
-    # query NAMES with prior sf0.1 runs, and an 8-core scaling run
-    # shares names with the 32-core primary — min-merging across either
-    # axis mixes configurations (r15 what's-wrong #4), so only
-    # same-sf/same-cpus prior runs (merge_runs, resolved above the sf1
-    # subprocess) participate; everything else is carried through to
-    # the written detail file UNCHANGED (r14 advice).
-    other_runs = [r for r in prior_runs if r not in merge_runs]
-    runs = merge_runs + [cur_run]
-    line_timings, line_duck, line_sf1 = timings, duck, sf1
-    if len(runs) > 1:
-        m_q = _min_intersect([r.get("queries") for r in runs])
-        m_d = _min_intersect([r.get("duckdb") for r in runs])
-        if m_q and m_d:
-            line_timings, line_duck = m_q, m_d
-        # sf1 merge is union-with-min (r15 verdict item 2): each run
-        # completes a budget-dependent subset of pairs; the union lets
-        # resume-aware runs accumulate full coverage while every entry
-        # stays a same-tree/same-config min.
-        ms_q = _min_union([r.get("sf1_queries") for r in runs])
-        ms_d = _min_union([r.get("sf1_duckdb") for r in runs])
-        if ms_q and ms_d:
-            line_sf1 = dict(sf1) if sf1_is_dict else {
-                "carried_forward": True
-            }
-            line_sf1["queries"] = ms_q
-            line_sf1["duckdb"] = ms_d
-            line_sf1["ratio"] = {
-                n: round(ms_q[n] / ms_d[n], 2)
-                for n in ms_d
-                if ms_d[n] > 0 and n in ms_q
-                and n not in SF1_TWIN_EXCLUDED
-            }
-            line_sf1["ratio_floor_adjusted"] = {
-                n: round(max(ms_q[n] - floor_s, 0.0) / ms_d[n], 2)
-                for n in ms_d
-                if ms_d[n] > 0 and n in ms_q
-                and n not in SF1_TWIN_EXCLUDED
-            }
-
-            def _present(r: dict, n: str) -> bool:
-                return n in (r.get("sf1_queries") or {}) or n in (
-                    r.get("sf1_duckdb") or {}
-                )
-
-            # unstable iff flagged in EVERY run that measured the pair
-            # (a pair seen by one run keeps that run's verdict)
-            line_sf1["unstable"] = sorted(
-                n
-                for n in set(ms_q) | set(ms_d)
-                if any(_present(r, n) for r in runs)
-                and all(
-                    n in (r.get("sf1_unstable") or [])
-                    for r in runs
-                    if _present(r, n)
-                )
-            )
-            import hashlib as _hl
-
-            line_sf1["pairs_md5"] = _hl.md5(
-                ",".join(
-                    sorted(line_sf1["ratio_floor_adjusted"])
-                ).encode()
-            ).hexdigest()[:10]
-            line_sf1["runs_merged"] = len(runs)
-    merged_value = round(sum(line_timings.values()), 3)
-
     full = {
-        **headline,
-        "value": merged_value,
+        "metric": METRIC,
+        "value": value,
+        "unit": "sec",
+        "sf": sf,
+        "spark_fixed_overhead_sec": floor_s,
+        "spark_fixed_overhead_1row_sec": floor_1row_s,
+        **rec,
         "partial": False,
         "host": host,
-        "cpus": cpus,
-        "queries_detail": spark_detail,
-        "duckdb_detail": duck_detail,
-        # carry a prior same-tree sf1 section forward through an
-        # sf1-disabled run instead of refusing the write (r15 verdict
-        # item 2): the accumulated runs list must keep growing
-        "sf1": sf1 if sf1 is not None else prior_record.get("sf1"),
-        "tree_id": tree_id,
-        "runs": other_runs + runs,
-        "runs_merged": len(runs),
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8),
+        "sf1": sf1,
     }
-    if sf1 is None and prior_record.get("sf1") is not None:
-        full["sf1_carried_forward"] = True
-    if line_timings is not timings:
-        full["merged"] = {
-            "queries": line_timings,
-            "duckdb": line_duck,
-            "sf1": None if line_sf1 is sf1 else {
-                "queries": line_sf1.get("queries"),
-                "duckdb": line_sf1.get("duckdb"),
-                "ratio_floor_adjusted": line_sf1.get(
-                    "ratio_floor_adjusted"
-                ),
-                "unstable": line_sf1.get("unstable"),
-            },
-        }
-    detail_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_DETAIL", "/tmp/bench_full.json"
-    )
-    try:
-        with open(detail_path, "w") as f:
-            json.dump(full, f, indent=1)
-        # a copy inside the repo survives the sandbox via the driver's
-        # end-of-round commit (the /tmp copy does not). An sf1-disabled
-        # run may write ONLY when it extends a same-tree record (the
-        # prior sf1 section is carried forward above); on a foreign
-        # tree it still refuses, so a smoke run cannot clobber the last
-        # full record with an sf1:null one.
-        if sf1 is not None or prior_record:
-            with open(repo_detail, "w") as f:
+    paths = [detail_path]
+    if _mirrors_to_repo(sf, sf1):
+        # a copy inside the repo survives the sandbox via the end-of-round
+        # commit (the /tmp copy does not)
+        paths.append(
+            os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                         "BENCH_FULL.json")
+        )
+    for p in paths:
+        try:
+            with open(p, "w") as f:
                 json.dump(full, f, indent=1)
-    except OSError:
-        pass
-
-    print(
-        compact_stdout_line(
-            merged_value, sf, line_timings, floor_s, line_duck, line_sf1,
-            detail_path,
-            floor_1row_s=floor_1row_s,
-            host=host,
-            runs_merged=len(runs) if len(runs) > 1 else None,
-            n_current_run=len(timings),
-        ),
-        flush=True,
-    )
+        except OSError:
+            pass
+    print(line(sf1, partial=False), flush=True)
 
 
 if __name__ == "__main__":

@@ -1,73 +1,212 @@
-"""Regression pins for the bench harness's failure-recovery paths —
+"""Regression pins for the bench harness: the interleaved pair timer,
+per-pair error isolation, the sf1 results file and the stdout line —
 round 9 lost an entire 90-minute sf1 section to one infeasible oracle;
 these tests keep the fixes honest. No Spark session needed."""
 
 import json
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 
 
-def test_sf1_progress_reconstruction(tmp_path, monkeypatch):
-    p = tmp_path / "progress.jsonl"
-    monkeypatch.setattr(bench, "_sf1_progress_path", lambda: str(p))
-    rows = [
-        {"k": "floor", "q": "floor_s", "v": 0.03},
-        {"k": "duckdb", "q": "q1", "v": {"min": 0.1, "med": 0.1, "n": 5, "spread": 1.1}},
-        {"k": "spark", "q": "q1", "v": {"min": 0.53, "med": 0.6, "n": 5, "spread": 1.2}},
-        {"k": "spark", "q": "q2", "v": {"min": 1.0, "med": 1.0, "n": 5, "spread": 2.5}},
-        {"k": "duckdb_cold", "q": "qc", "v": 6.8},
-        {"k": "error", "q": "duckdb:bad", "v": "boom"},
-    ]
-    with open(p, "w") as f:
+def _pair(spark_min, duck_min=None, spark_spread=1.1, duck_spread=1.1):
+    def side(m, spread):
+        return {"min": m, "med": m, "n": 3, "spread": spread}
+
+    return {
+        "spark": side(spark_min, spark_spread),
+        "duckdb": side(duck_min, duck_spread) if duck_min else None,
+        "errors": {},
+    }
+
+
+def _write_results(path, rows, tail=""):
+    with open(path, "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")
-    out = bench._sf1_from_progress("section timeout")
-    assert out["partial_from_progress"] is True
+        f.write(tail)
+
+
+def test_sf1_progress_reconstruction(tmp_path):
+    """A results file cut mid-run (the child died while writing a line)
+    still yields every pair that finished: the section has ONE build
+    path, clean exit or not."""
+    p = tmp_path / "results.jsonl"
+    rows = [
+        {"run_id": "r1", "host_start": {"load1": 0.5}},
+        {"floor_s_subprocess": 0.03},
+        {"free_disk_gb_at_start": 79.1},
+        {"q": "q1", "cold": False, **_pair(0.53, 0.1)},
+        {"q": "q2", "cold": False, **_pair(1.0, spark_spread=2.5)},
+        {"q": "bad", "cold": False, "spark": None, "duckdb": None,
+         "errors": {"duckdb": "boom", "spark": "bang"}},
+        {"q": "graph_pagerank", "cold": True, **_pair(11.4, 6.8)},
+        {"q": "q9", "skipped": "deadline"},
+    ]
+    _write_results(p, rows, tail='{"q": "q3", "cold": false, "spa')
+    out = bench._sf1_section(str(p), "r1", "sf1 subprocess rc=-9: killed")
     # floor subtracted before the ratio
     assert out["ratio_floor_adjusted"]["q1"] == round(0.5 / 0.1, 2)
     # q2 has no duck pair -> no ratio, but its spread flags it unstable
     assert "q2" not in out["ratio_floor_adjusted"]
     assert "q2" in out["unstable"]
-    assert out["cold_duckdb_sec"]["qc"] == 6.8
+    assert "q3" not in out["queries"]
+    assert out["cold_sec"]["graph_pagerank"] == 11.4
+    assert out["cold_duckdb_sec"]["graph_pagerank"] == 6.8
+    assert "graph_pagerank" not in out["queries"]
     assert out["errors"]["duckdb:bad"] == "boom"
-    assert out["errors"]["section"] == "section timeout"
+    assert out["errors"]["spark:bad"] == "bang"
+    assert out["errors"]["section"].startswith("sf1 subprocess rc=-9")
+    assert out["deadline_skipped"] == ["q9"]
+    assert out["free_disk_gb_at_start"] == 79.1
+    assert out["host_start"] == {"load1": 0.5}
 
 
-def test_sf1_progress_missing_file_degrades(monkeypatch, tmp_path):
-    monkeypatch.setattr(
-        bench, "_sf1_progress_path", lambda: str(tmp_path / "absent.jsonl")
-    )
-    out = bench._sf1_from_progress("err msg")
+def test_sf1_section_excludes_twin_pairs_from_ratio_maps(tmp_path):
+    p = tmp_path / "results.jsonl"
+    twin = bench.SF1_TWIN_EXCLUDED[0]
+    _write_results(p, [
+        {"run_id": "r1"},
+        {"floor_s_subprocess": 0.0},
+        {"q": twin, "cold": False, **_pair(4.0, 2.0)},
+        {"q": "ts_ewma", "cold": False, **_pair(3.0)},
+    ])
+    out = bench._sf1_section(str(p), "r1")
+    assert twin not in out["ratio_floor_adjusted"]
+    assert twin not in out["ratio"]
+    assert out["twin_ratio"] == {twin: 2.0}
+    assert out["spark_only"] == {"ts_ewma": 3.0}
+    assert "errors" not in json.loads(
+        bench.compact_stdout_line(1.0, 0.1, {}, 0.0, {}, out, "/tmp/x.json")
+    )["sf1"]
+
+
+def test_sf1_progress_missing_file_degrades(tmp_path):
+    out = bench._sf1_section(str(tmp_path / "absent.jsonl"), "r1", "err msg")
     assert out == {"error": "err msg"}
 
 
 def test_duckdb_budget_interrupts_runaway():
-    """A query slower than the budget must surface as an exception the
-    caller records per-query (never a section hang)."""
+    """A DuckDB query slower than its budget is interrupted and lands
+    in the pair's errors (never a section hang); the Spark side of the
+    same pair is still timed."""
     import duckdb
 
     con = duckdb.connect()
-    orig = bench.SF1_DUCK_QUERY_BUDGET_S
-    bench.SF1_DUCK_QUERY_BUDGET_S = 0.3
-    try:
-        try:
-            # ~10^9-row cross join: far beyond the 0.3 s budget
-            bench.run_duckdb_budgeted(
-                con,
-                "SELECT COUNT(*) FROM range(100000) a, range(100000) b "
-                "WHERE (a.range*b.range) % 7 = 3",
-                n_runs=2,
-            )
-            raised = False
-        except Exception:
-            raised = True
-        assert raised
-    finally:
-        bench.SF1_DUCK_QUERY_BUDGET_S = orig
+    # ~10^10-row cross join: far beyond the 0.3 s budget
+    sql = ("SELECT COUNT(*) FROM range(100000) a, range(100000) b "
+           "WHERE (a.range*b.range) % 7 = 3")
+    t0 = time.perf_counter()
+    out = bench.time_pair(
+        lambda: None, lambda: con.execute(sql).fetchall(), con.interrupt,
+        n_runs=2, duck_budget_s=0.3,
+    )
+    assert time.perf_counter() - t0 < 30
+    assert out["duckdb"] is None
+    assert "Interrupt" in out["errors"]["duckdb"]
+    assert out["spark"]["n"] == 2
+
+
+def test_pair_timer_interleaves_spark_and_duckdb():
+    """One warm-up per engine, then Spark and DuckDB alternate run by
+    run, so both windows see the same host state."""
+    calls = []
+    out = bench.time_pair(
+        lambda: calls.append("S"), lambda: calls.append("D"), n_runs=3,
+    )
+    assert calls == ["S", "D"] * 4
+    assert out["spark"]["n"] == out["duckdb"]["n"] == 3
+    assert out["errors"] == {}
+    # cold timing: no warm-up, one run each; a Spark-only row
+    calls.clear()
+    bench.time_pair(lambda: calls.append("S"), lambda: calls.append("D"),
+                    n_runs=1, warm=False)
+    assert calls == ["S", "D"]
+    solo = bench.time_pair(lambda: None, n_runs=2)
+    assert solo["duckdb"] is None and solo["spark"]["n"] == 2
+
+
+def test_pair_timer_stops_a_side_alone(monkeypatch):
+    """A side past SLOW_RUN_CUTOFF_S after two runs stops repeating
+    while the other engine finishes its rounds; a side failing after a
+    timed run keeps its window and names the error."""
+    monkeypatch.setattr(bench, "SLOW_RUN_CUTOFF_S", -1.0)
+    calls = []
+    out = bench.time_pair(
+        lambda: calls.append("S"), lambda: calls.append("D"), n_runs=4,
+    )
+    assert calls.count("S") == calls.count("D") == 3  # warm-up + 2
+    monkeypatch.setattr(bench, "SLOW_RUN_CUTOFF_S", 10.0)
+    n = {"D": 0}
+
+    def duck():
+        n["D"] += 1
+        if n["D"] > 2:
+            raise RuntimeError("lost the connection")
+
+    out = bench.time_pair(lambda: None, duck, n_runs=4)
+    assert out["spark"]["n"] == 4
+    assert out["duckdb"]["n"] == 1
+    assert "lost the connection" in out["duckdb"]["stopped"]
+    assert out["errors"] == {}
+
+
+def test_failing_pair_lands_in_errors_and_others_are_timed():
+    """One failing query (either engine) is recorded under errors and
+    the run goes on: the pairs after it are still timed on both."""
+
+    def boom():
+        raise ValueError("no such column")
+
+    fakes = {
+        "q1": (lambda: None, lambda: None),
+        "bad_spark": (boom, lambda: None),
+        "bad_duck": (lambda: None, boom),
+        "q2": (lambda: None, lambda: None),
+    }
+    pairs = {n: bench.time_pair(s, d, n_runs=2) for n, (s, d) in fakes.items()}
+    sec = bench._tabulate(pairs, 0.0)
+    assert set(sec["queries"]) == {"q1", "bad_duck", "q2"}
+    assert set(sec["duckdb"]) == {"q1", "bad_spark", "q2"}
+    assert sec["errors"] == {
+        "spark:bad_spark": "ValueError: no such column",
+        "duckdb:bad_duck": "ValueError: no such column",
+    }
+
+
+def test_duck_spill_cap_follows_free_disk(monkeypatch):
+    """DuckDB may spill into at most half the free space of its temp
+    filesystem (a fixed 40 GB cap exceeded a 20 GB-free disk)."""
+    monkeypatch.setattr(bench, "_free_bytes", lambda path="/tmp": 20 * 1024**3)
+    con = bench._duck_connect()
+    cap = con.execute(
+        "SELECT current_setting('max_temp_directory_size')"
+    ).fetchone()[0]
+    assert cap == "10.0 GiB"
+
+
+def test_repo_mirror_only_for_headline_sf_runs_with_sf1():
+    """ADVICE defect 1: a smoke run at another sf, or a run whose sf1
+    section measured nothing, must not overwrite BENCH_FULL.json."""
+    sf1 = {"ratio_floor_adjusted": {"q": 1.2}}
+    assert bench._mirrors_to_repo(bench.HEADLINE_SF, sf1)
+    assert not bench._mirrors_to_repo("0.01", sf1)
+    assert not bench._mirrors_to_repo(bench.HEADLINE_SF, None)
+    assert not bench._mirrors_to_repo(
+        bench.HEADLINE_SF, {"skipped": "insufficient_disk"}
+    )
+
+
+def test_stdout_metric_names_interleaved_pairs():
+    rec = json.loads(bench.compact_stdout_line(
+        1.0, 0.1, {"q": 1.0}, 0.02, {"q": 0.5}, None, "/tmp/x.json",
+    ))
+    assert rec["metric"].endswith("interleaved with DuckDB per pair")
+    assert "n_errors" not in rec
 
 
 def test_infeasible_oracle_pairs_stay_off_sf1():
@@ -100,9 +239,15 @@ def test_sf1_order_is_degradation_aware():
 
 def test_stdout_line_budget_worst_case():
     """The final stdout line must fit the driver's tail capture with
-    every current query in both sets."""
+    every current query in both sets, every sf0.1 pair failing on both
+    engines, and the host blob."""
     timings = {q: 1.234 for q in bench.HEADLINE}
     duck = {q: 0.123 for q in bench.HEADLINE}
+    errors = {
+        f"{side}:{q}": "Py4JJavaError: " + "x" * 200
+        for q in bench.HEADLINE
+        for side in ("spark", "duckdb")
+    }
     sf1 = {
         "ratio_floor_adjusted": {q: 12.345 for q in bench.SF1_QUERIES},
         "unstable": ["a", "b", "c"],
@@ -110,36 +255,34 @@ def test_stdout_line_budget_worst_case():
         "errors": [1],
         "spark_only": {q: 1.23 for q in bench.SF1_SPARK_ONLY},
         "cold_sec": {"scd2_build": 1.76, "graph_pagerank": 11.43},
+        "deadline_skipped": list(bench.SF1_QUERIES),
     }
+    host = {"load1": [12.3, 14.5], "mem_gb": [14.1, 13.2]}
     line = bench.compact_stdout_line(
-        12.3, 0.1, timings, 0.027, duck, sf1, "/tmp/x.json"
+        12.3, 0.1, timings, 0.027, duck, sf1, "/tmp/x.json",
+        floor_1row_s=0.025, host=host, errors=errors,
     )
     assert len(line) < bench.STDOUT_LINE_BUDGET
-    json.loads(line)
+    rec = json.loads(line)
+    assert rec["n_errors"] == 2 * len(bench.HEADLINE)
 
 
-def test_sf1_progress_rejects_stale_run_id(tmp_path, monkeypatch):
-    """ADVICE r9: if the child died before stamping THIS run's id, a
-    leftover progress file from an earlier run must not be published
-    as this run's partial measurements."""
-    p = tmp_path / "progress.jsonl"
-    monkeypatch.setattr(bench, "_sf1_progress_path", lambda: str(p))
-    rows = [
-        {"k": "run_id", "q": "run_id", "v": "oldrun"},
-        {"k": "duckdb", "q": "q1",
-         "v": {"min": 0.1, "med": 0.1, "n": 3, "spread": 1.1}},
-        {"k": "spark", "q": "q1",
-         "v": {"min": 0.5, "med": 0.6, "n": 3, "spread": 1.2}},
-    ]
-    with open(p, "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-    out = bench._sf1_from_progress("child died early", "newrun")
+def test_sf1_progress_rejects_stale_run_id(tmp_path):
+    """If the child died before stamping THIS run's id, a leftover
+    results file from an earlier run must not be published as this
+    run's measurements."""
+    p = tmp_path / "results.jsonl"
+    _write_results(p, [
+        {"run_id": "oldrun"},
+        {"floor_s_subprocess": 0.0},
+        {"q": "q1", "cold": False, **_pair(0.5, 0.1)},
+    ])
+    out = bench._sf1_section(str(p), "newrun", "child died early")
     assert out.get("stale_progress_rejected") is True
+    assert out["error"] == "child died early"
     assert "ratio_floor_adjusted" not in out
-    # matching id still reconstructs
-    ok = bench._sf1_from_progress("late death", "oldrun")
-    assert ok["partial_from_progress"] is True
+    # matching id still builds the section
+    ok = bench._sf1_section(str(p), "oldrun")
     assert "q1" in ok["ratio_floor_adjusted"]
 
 
@@ -158,27 +301,25 @@ def test_stdout_line_carries_deadline_skip_count():
 
 
 def test_duckdb_budget_timer_is_cleared_when_query_finishes():
-    """The done-flag guard (ADVICE r9): a budget expiring after the
-    final fetchall must not fire an interrupt onto the shared
-    connection."""
-    import time as _time
-
+    """The done-flag guard: a budget expiring after the final fetchall
+    must not fire an interrupt onto the shared connection."""
     import duckdb
 
     con = duckdb.connect()
-    res = bench.run_duckdb_budgeted(
-        con, "SELECT 1", n_runs=2, budget_s=0.2
+    out = bench.time_pair(
+        lambda: None, lambda: con.execute("SELECT 1").fetchall(),
+        con.interrupt, n_runs=2, duck_budget_s=0.2,
     )
-    assert res["n"] == 2
-    _time.sleep(0.4)  # past the budget; guarded timer must be a no-op
+    assert out["duckdb"]["n"] == 2
+    time.sleep(0.4)  # past the budget; guarded timer must be a no-op
     assert con.execute("SELECT 41 + 1").fetchone()[0] == 42
 
 
 def test_stdout_line_carries_host_telemetry_and_named_errors():
     """r12 verdict items 1-2: the compact line must carry the host
-    blob (loadavg, memory, warm-canary drift) and every sf1 error BY
-    NAME with its exception class — an anonymous n_errors or a record
-    with no contention telemetry is the r12 adjudication failure."""
+    blob (loadavg, memory) and every error BY NAME — sf1 errors with
+    their exception class — an anonymous n_errors or a record with no
+    contention telemetry is the r12 adjudication failure."""
     timings = {"q1": 1.0, "flagship_flat": 0.9}
     duck = {"q1": 0.5, "flagship_flat": 0.3}
     sf1 = {
@@ -193,14 +334,14 @@ def test_stdout_line_carries_host_telemetry_and_named_errors():
     host = {
         "load1": [0.2, 21.5],
         "mem_gb": [124.8, 118.5],
-        "canary": {"q": "flagship_flat",
-                   "spark_drift": 0.93, "duckdb_drift": 1.1},
     }
     line = bench.compact_stdout_line(
-        1.9, 0.1, timings, 0.02, duck, sf1, "/tmp/x.json", host=host
+        1.9, 0.1, timings, 0.02, duck, sf1, "/tmp/x.json", host=host,
+        errors={"spark:q2": "AnalysisException: boom"},
     )
     rec = json.loads(line)
-    assert rec["host"]["canary"]["spark_drift"] == 0.93
+    assert rec["n_errors"] == 1 and rec["errors"] == ["spark:q2"]
+    assert rec["host"]["mem_gb"] == [124.8, 118.5]
     assert rec["host"]["load1"] == [0.2, 21.5]
     assert rec["sf1"]["errors"] == {
         "duckdb:bad": "InterruptException: INTERRUPT"
@@ -235,64 +376,6 @@ def test_floor_bound_names_trim_to_truncated_ratio_map():
     assert s1.get("ratio_truncated") is True
     assert s1["n_floor_bound"] == n
     assert set(s1["floor_bound"]) <= set(s1["ratio"])
-
-
-def test_min_intersect_takes_per_key_minimum_over_common_keys():
-    runs = [
-        {"a": 1.0, "b": 2.0, "c": 9.0},
-        {"a": 0.8, "b": 2.5},
-    ]
-    assert bench._min_intersect(runs) == {"a": 0.8, "b": 2.0}
-    # any missing/empty map disables the merge entirely (a run that
-    # lost its sf1 section must not shrink the intersection silently)
-    assert bench._min_intersect([{"a": 1.0}, None]) == {}
-    assert bench._min_intersect([]) == {}
-
-
-def test_load_prior_runs_rejects_foreign_tree(tmp_path):
-    p = tmp_path / "BENCH_FULL.json"
-    runs = [{"value": 1.0, "queries": {"q": 1.0}}]
-    p.write_text(json.dumps({"tree_id": "abc", "runs": runs}))
-    assert bench._load_prior_runs(str(p), "abc") == runs
-    assert bench._load_prior_runs(str(p), "other") == []
-    assert bench._load_prior_runs(str(p), "unknown") == []
-    assert bench._load_prior_runs(str(tmp_path / "nope.json"), "abc") == []
-
-
-def test_tree_id_is_stable_within_a_tree():
-    a, b = bench._tree_id(), bench._tree_id()
-    assert a == b
-    assert a != ""
-
-
-def test_stdout_metric_names_merged_run_count():
-    line = bench.compact_stdout_line(
-        1.0, 0.1, {"q": 1.0}, 0.02, {"q": 0.5}, None, "/tmp/x.json",
-        runs_merged=3,
-    )
-    rec = json.loads(line)
-    assert "min-intersection of 3 same-tree runs" in rec["metric"]
-    line1 = bench.compact_stdout_line(
-        1.0, 0.1, {"q": 1.0}, 0.02, {"q": 0.5}, None, "/tmp/x.json",
-    )
-    assert "min-intersection" not in json.loads(line1)["metric"]
-
-
-def test_stdout_line_names_merged_intersection_size():
-    """r14 advice: a deadline-lost query silently shrinks the merged
-    set — the record must carry merged-vs-current-run query counts."""
-    line = bench.compact_stdout_line(
-        1.0, 0.1, {"q": 1.0, "r": 2.0}, 0.02, {"q": 0.5}, None,
-        "/tmp/x.json", runs_merged=2, n_current_run=5,
-    )
-    rec = json.loads(line)
-    assert rec["n_queries_merged"] == 2
-    assert rec["n_queries_current_run"] == 5
-    unmerged = json.loads(bench.compact_stdout_line(
-        1.0, 0.1, {"q": 1.0}, 0.02, {"q": 0.5}, None, "/tmp/x.json",
-        n_current_run=5,
-    ))
-    assert "n_queries_merged" not in unmerged
 
 
 def test_headline_pairs_are_registered_with_oracles():
@@ -395,46 +478,3 @@ def test_shuffle_partitions_follow_cpu_knob(monkeypatch):
     # cluster override wins (SCALE.md: ~2-4x total executor cores)
     monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4096")
     assert _local_shuffle_partitions() == "4096"
-
-
-def test_min_union_accumulates_coverage_across_runs():
-    """r15 verdict item 2: the sf1 merge is union-with-min so
-    budget-limited runs ACCUMULATE coverage (an intersection merge
-    shrinks to the weakest run's subset)."""
-    runs = [
-        {"a": 1.0, "b": 2.0},
-        {"b": 1.5, "c": 3.0},
-        None,
-    ]
-    assert bench._min_union(runs) == {"a": 1.0, "b": 1.5, "c": 3.0}
-    assert bench._min_union([]) == {}
-    assert bench._min_union([None]) == {}
-
-
-def test_load_prior_record_rejects_foreign_tree(tmp_path):
-    p = tmp_path / "BENCH_FULL.json"
-    rec = {"tree_id": "abc", "sf1": {"queries": {"q": 1.0}}, "runs": []}
-    p.write_text(json.dumps(rec))
-    assert bench._load_prior_record(str(p), "abc") == rec
-    assert bench._load_prior_record(str(p), "other") == {}
-    assert bench._load_prior_record(str(p), "unknown") == {}
-
-
-def test_stdout_line_carries_recheck_skip_count():
-    """Deadline skips of already-covered pairs are counted separately
-    (they are NOT missing measurements — the accumulated record has a
-    same-tree number for each)."""
-    sf1 = {
-        "ratio_floor_adjusted": {"q": 1.5},
-        "queries": {"q": 3.0},
-        "duckdb": {"q": 2.0},
-        "deadline_skipped": ["spark:fresh_q"],
-        "deadline_skipped_recheck": ["spark:old_q", "duckdb:old_q"],
-    }
-    line = bench.compact_stdout_line(
-        1.0, 1, {"q": 1.0}, 0.02, {"q": 0.5}, sf1, "/tmp/x.json"
-    )
-    rec = json.loads(line)
-    assert rec["sf1"]["n_deadline_skipped"] == 1
-    assert rec["sf1"]["skipped_q"] == ["spark:fresh_q"]
-    assert rec["sf1"]["n_skip_recheck"] == 2

@@ -6,8 +6,10 @@ not measurements).
 
 Usage: python tools/bench_agreement.py run1.json run2.json [tol]
 
-Compares the sf0.1 per-query Spark minima and, when both records carry a
-completed sf1 section, the sf1 minima for both engines. Queries flagged
+bench.py times each pair interleaved, so the per-pair floor-adjusted
+ratio is the unit of measurement: this compares it next to the Spark
+minimum, for the sf0.1 section and, when both records carry a completed
+sf1 section, for sf1 (plus the sf1 DuckDB minima). Pairs flagged
 ``unstable`` (spread > 2x) in either run are reported separately — their
 disagreement is already declared by the record itself.
 """
@@ -52,23 +54,26 @@ def main() -> int:
     tol = float(sys.argv[3]) if len(sys.argv) > 3 else 0.30
     r1 = json.load(open(p1))
     r2 = json.load(open(p2))
-    unstable = set(_section(r1, "sf1").get("unstable", []) or []) | set(
-        _section(r2, "sf1").get("unstable", []) or []
-    )
-    n_bad = compare(
-        r1.get("queries", {}), r2.get("queries", {}),
-        "sf0.1 spark (min)", tol, set(),
-    )
-    n_bad += compare(
-        _section(r1, "sf1", "queries"), _section(r2, "sf1", "queries"),
-        "sf1 spark (min)", tol, unstable,
-    )
-    n_bad += compare(
-        _section(r1, "sf1", "duckdb"), _section(r2, "sf1", "duckdb"),
-        "sf1 duckdb (min)", tol, unstable,
-    )
+    n_bad = 0
+    for label, sec1, sec2 in (
+        ("sf0.1", r1, r2),
+        ("sf1", _section(r1, "sf1"), _section(r2, "sf1")),
+    ):
+        unstable = set(sec1.get("unstable") or []) | set(
+            sec2.get("unstable") or []
+        )
+        keys = [("queries", "spark (min)"),
+                ("ratio_floor_adjusted", "floor-adjusted ratio")]
+        if label == "sf1":
+            keys.append(("duckdb", "duckdb (min)"))
+        for key, what in keys:
+            n_bad += compare(
+                _section(sec1, key), _section(sec2, key),
+                f"{label} {what}", tol, unstable,
+            )
+        print(f"\n{label} unstable-declared (excluded): {sorted(unstable)}")
     print(f"\nverdict: {'AGREE' if n_bad == 0 else f'{n_bad} DISAGREEMENTS'}"
-          f" at tol={tol:.0%} (unstable-declared excluded: {sorted(unstable)})")
+          f" at tol={tol:.0%}")
     return 0 if n_bad == 0 else 1
 
 

@@ -10,7 +10,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import ensure_sf1, run_spark  # noqa: E402
+from bench import ensure_sf1, spark_noop, time_pair  # noqa: E402
 from etl_verkada_spark.registry import build_registry  # noqa: E402
 from etl_verkada_spark.session import get_spark  # noqa: E402
 
@@ -32,7 +32,7 @@ def main() -> None:
     tracker = sc.statusTracker()
     for name in QUERIES:
         fn = registry[name].fn
-        t = run_spark(fn, spark, sf1, n_runs=5)["min"]
+        t = time_pair(spark_noop(fn, spark, sf1), n_runs=5)["spark"]["min"]
         # one more run with job tracking
         before = set(tracker.getJobIdsForGroup(None) or [])
         sc.setJobGroup(name, name)

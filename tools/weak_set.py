@@ -3,8 +3,8 @@
 The per-round grading question is always the same: which pairs are
 >2x floor-adjusted, NOT floor-bound, and what does the record already
 say about them (annotation / unstable flag / twin exclusion)? This
-reads the committed detail file and answers it in one table, for both
-the merged cross-run maps (when present) and the current run.
+reads a bench detail file (one run) and answers it in one table per
+section.
 
     python tools/weak_set.py [BENCH_FULL.json]
 """
@@ -67,26 +67,13 @@ def main() -> None:
     s1 = d.get("sf1") or {}
     ann = s1.get("annotations") or {}
     report(
-        "sf0.1 (current run)", d.get("queries", {}), d.get("duckdb", {}),
-        floor, ann, [],
+        "sf0.1", d.get("queries", {}), d.get("duckdb", {}),
+        floor, ann, d.get("unstable"),
     )
     if s1.get("queries"):
         report(
-            "sf1 (current run)", s1["queries"], s1.get("duckdb", {}),
+            "sf1", s1["queries"], s1.get("duckdb", {}),
             floor, ann, s1.get("unstable"),
-        )
-    m = d.get("merged") or {}
-    if m.get("queries"):
-        report(
-            f"sf0.1 (merged, {d.get('runs_merged')} runs)",
-            m["queries"], m.get("duckdb", {}), floor, ann, [],
-        )
-    ms1 = m.get("sf1") or {}
-    if ms1 and ms1.get("queries"):
-        report(
-            f"sf1 (merged, {d.get('runs_merged')} runs)",
-            ms1["queries"], ms1.get("duckdb", {}), floor, ann,
-            ms1.get("unstable"),
         )
 
 
