@@ -699,8 +699,9 @@ SF1_QUERIES = [
     "llm_dedup_bloom",
     "win_session_attribution",
     # r11 session-2 additions — fresh pairs (graph_jaccard shares the
-    # wedge-join cost family; stream_topk's fold replays 4 triggers,
-    # priced against the one-shot ranking like the other fold rows)
+    # wedge-join cost family; stream_topk's fold replays 2 chunk-pair
+    # triggers, priced against the one-shot ranking like the other fold
+    # rows)
     "ts_winsorize",
     "ts_lttb",
     "llm_tokenizer_fertility",
@@ -817,9 +818,9 @@ SF1_TWIN_EXCLUDED = ["llm_eval_ngram_recall"]
 SF1_ANNOTATIONS = {
     "stream_mv_refresh": (
         "replay-stress row: replays ALL chunks through availableNow "
-        "micro-batch machinery (4 triggers + state versioning) vs a "
-        "one-shot batch twin; the steady-state incremental refresh "
-        "cost is the stream_mv_apply row"
+        "micro-batch machinery (2 chunk-pair triggers + state "
+        "versioning) vs a one-shot batch twin; the steady-state "
+        "incremental refresh cost is the stream_mv_apply row"
     ),
     "llm_dedup_prefixfilter": (
         "DuckDB side runs the equal-work prefix-filter twin (see "
@@ -841,8 +842,8 @@ SF1_ANNOTATIONS = {
     ),
     "stream_drift": (
         "replay-stress row: replays ALL chunks through availableNow "
-        "micro-batch machinery (4 triggers + a full state overwrite "
-        "per trigger) vs a one-shot batch twin; the steady-state "
+        "micro-batch machinery (2 chunk-pair triggers + a fresh state "
+        "version per trigger) vs a one-shot batch twin; the steady-state "
         "incremental refresh cost is the stream_drift_apply row"
     ),
     "llm_dedup_bloom": (

@@ -98,15 +98,6 @@ def _qnorm(qvec: list[float]) -> float:
     return math.sqrt(acc)
 
 
-def _sim_to_query(qvec: list[float]) -> F.Column:
-    """cosine(q, embedding) with the query norm folded to a literal
-    (interpreted HOF fold — kept as the pure-Catalyst reference path;
-    the hot path is :func:`_sim_to_query_udf`)."""
-    qlit = F.array(*[F.lit(v) for v in qvec])
-    embd = _as_double(F.col("embedding"))
-    return _dot(qlit, embd) / (F.lit(_qnorm(qvec)) * F.sqrt(_dot(embd, embd)))
-
-
 def _sim_to_query_udf(qvec: list[float]):
     """cosine(q, embedding) as ONE numpy matvec per Arrow batch.
 

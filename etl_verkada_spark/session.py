@@ -51,6 +51,13 @@ def _local_shuffle_partitions() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
 
 
+def _default_driver_memory(phys_bytes: int) -> str:
+    """Driver heap for sessions this package builds: half of physical
+    memory, capped at 16g. A fixed 16g overcommits a 15 GB host;
+    ``SPARK_DRIVER_MEMORY`` overrides."""
+    return f"{min(phys_bytes // 2, 16 << 30) >> 20}m"
+
+
 #: Confs that are runtime-settable (plain SQLConf) and required for
 #: correct + fast behavior regardless of who built the session.
 RUNTIME_DEFAULTS: dict[str, str] = {
@@ -118,14 +125,21 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
 def get_spark(app_name: str = "etl-verkada-spark") -> SparkSession:
     """Create (or fetch) a local session tuned for this machine.
 
-    Honors ``SPARK_GRAFT_CPUS`` (the bench driver's thread count knob).
+    Honors ``SPARK_GRAFT_CPUS`` (the bench driver's thread count knob)
+    and ``SPARK_DRIVER_MEMORY`` (default: half the host, at most 16g).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or _default_driver_memory(
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+            ),
+        )
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
     )

@@ -13,6 +13,11 @@ mapping:
   ``foreachBatch`` sink applying the same merge into a parquet state
   dir per micro-batch (exactly the scheduled-run snapshot-diff the
   reference performs per Lambda invocation).
+* :class:`FoldFamily` with :func:`versioned_fold`, :func:`replay` and
+  :func:`apply_step` — incremental folds whose state is mergeable
+  partials refreshed from the arriving data only: MV refresh
+  (:data:`MV`), drift monitor (:data:`DRIFT`) and top-K leaderboard
+  (:data:`TOPK`), each registered as a replay row and an apply row.
 
 The ``upsert_merge`` registered query simulates two scheduled runs over
 the orders table and oracle-checks the final converged state; MERGE
@@ -22,13 +27,25 @@ tests/test_properties.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+import shutil
+import uuid
+from collections.abc import Callable
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..checkpoints import release
+from ..operators.aggregates import (
+    ORACLE_AGG_INCREMENTAL_MERGE, scaled_long, unscale,
+)
 from ..operators.dedup import last_wins
+from ..operators.quality import ORACLE_DQ_DRIFT, drift_pairs, drift_tvd
+from ..operators.scans import _land_dir
 from ..registry import spec
+from ..session import ensure_session_defaults
 
 
 def merge_last_wins(
@@ -189,18 +206,57 @@ FROM (
 """
 
 
-#: number of landed event chunks = number of micro-batches the MV
-#: refresh stream folds through (one file per trigger)
-MV_CHUNKS = 4
-MV_DAY_US = 86_400_000_000
+# ---------------------------------------------------------------------------
+# Incremental fold families: MV refresh, drift monitor, top-K leaderboard.
+#
+# Each family keeps its state as mergeable partials and refreshes it from
+# the arriving data only. A family is three small functions over a landed
+# "files arriving" fixture; the drivers below are shared:
+#
+# * :func:`versioned_fold` — the foreachBatch sink folding one micro-batch
+#   into versioned parquet state;
+# * :func:`replay` — an availableNow stream folding ALL landed chunks (the
+#   replay-stress row: full-data work plus micro-batch machinery);
+# * :func:`apply_step` — ONE refresh step: state primed from chunks
+#   0..n-2 (a cached fixture), then only the arriving last chunk is
+#   scanned and merged (the steady-state incremental cost the pattern
+#   exists to buy, like scd2_apply next to scd2_build).
+#
+# Every oracle is the from-scratch recompute over ALL rows, so the
+# driver's hash check proves no batch boundary lost or double-counted
+# anything. At 100 TB state stays metadata-sized and refresh cost scales
+# with the arriving partition, never with history.
+# ---------------------------------------------------------------------------
 
 
-def _mv_latest_version(state_dir: str) -> int | None:
+@dataclass(frozen=True)
+class FoldFamily:
+    """One incremental fold family.
+
+    ``source(spark, sf_dir)`` returns the rows to land, with a
+    ``__chunk`` column assigning each to one of ``n_chunks`` chunks;
+    ``partial(rows)`` turns arriving rows into state partials;
+    ``merge(partials)`` folds a union of partials into state (it must be
+    associative, so trigger grouping and batch order cannot change the
+    result); ``final(state)`` projects the state to the query's output.
+    ``landing_version`` is the landing layout version: bump it when the
+    chunk scheme changes so stale landings (and the state fixtures
+    derived from their file identities) rebuild instead of mis-parsing.
+    """
+
+    land_name: str
+    landing_version: str
+    n_chunks: int
+    source: Callable[[SparkSession, str], DataFrame]
+    partial: Callable[[DataFrame], DataFrame]
+    merge: Callable[[DataFrame], DataFrame]
+    final: Callable[[DataFrame], DataFrame]
+
+
+def _latest_version(state_dir: str) -> int | None:
     """Highest COMMITTED state version under ``state_dir`` (a ``v{bid}``
     subdirectory with Spark's ``_SUCCESS`` marker), or None. Pure
     driver-side directory listing — no Spark job."""
-    import os
-
     best = None
     try:
         names = os.listdir(state_dir)
@@ -218,57 +274,41 @@ def _mv_latest_version(state_dir: str) -> int | None:
     return best
 
 
-def mv_fold(state_dir: str):
-    """Build the foreachBatch fold for incremental MV maintenance:
-    merge the batch's (event_type, count, scaled-sum) partials into the
-    parquet state table.
+def versioned_fold(state_dir: str, family: FoldFamily):
+    """Build the foreachBatch fold of ``family``: merge the batch's
+    partials into the parquet state table.
 
     State is VERSIONED: fold N writes ``state_dir/v{batch_id}``; the
     current state is the highest committed (``_SUCCESS``-marked)
-    version. This buys three things over the previous overwrite-in-
-    place fold: (1) replay detection (sums are not idempotent and
+    version. This buys three things over an overwrite-in-place fold:
+    (1) replay detection (sums and counts are not idempotent and
     foreachBatch is at-least-once) is a driver-side directory listing
-    instead of a ``max(last_bid)`` Spark job per batch; (2) writing to
-    a fresh directory removes the read-then-overwrite-same-path
-    conflict, so the eager ``localCheckpoint`` job per batch goes away
-    too — together those two jobs were ~40% of the sf1 wall-clock;
+    instead of a ``max(last_bid)`` Spark job per batch; (2) writing to a
+    fresh directory removes the read-then-overwrite-same-path conflict,
+    so no eager ``localCheckpoint`` job per batch either — together
+    those two jobs were ~40% of the sf1 wall-clock (SCALE.md §18);
     (3) a fold that dies mid-write leaves no ``_SUCCESS``, so the next
-    replay folds from the last committed version — the overwrite form
-    could destroy state it was still reading from. Superseded versions
+    replay folds from the last committed version. Superseded versions
     are pruned after commit (production would vacuum asynchronously).
     """
-    import os
-    import shutil
-
-    from ..operators.aggregates import scaled_long
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        bspark = batch_df.sparkSession
-        latest = _mv_latest_version(state_dir)
+        latest = _latest_version(state_dir)
         if latest is not None and batch_id <= latest:
             return  # at-least-once replay: already folded, skip
-        part = batch_df.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(scaled_long("value")).alias("c"),
-        )
+        state = family.partial(batch_df)
         if latest is not None:
-            state = bspark.read.parquet(
+            prev = batch_df.sparkSession.read.parquet(
                 os.path.join(state_dir, f"v{latest}")
             )
-            part = (
-                state.unionByName(part)
-                .groupBy("event_type")
-                .agg(F.sum("n").alias("n"), F.sum("c").alias("c"))
-            )
-        # state cardinality == |event_type| (metadata-sized): one file
-        # avoids 32 near-empty write tasks per fold. A grid-sized MV
-        # (millions of groups) would drop the coalesce and keep the
-        # aggregate's partitioning. mode=overwrite because a fold that
-        # died MID-WRITE leaves an uncommitted (no _SUCCESS) v{bid}
-        # directory behind — the replay must be able to rewrite it, and
-        # overwriting an uncommitted version is safe by construction
-        # (nothing ever reads a version without its _SUCCESS marker).
-        part.coalesce(1).write.mode("overwrite").parquet(
+            state = family.merge(prev.unionByName(state))
+        # state is metadata-sized (|group| or K x |series| rows): one
+        # file avoids near-empty write tasks per fold. mode=overwrite
+        # because a fold that died MID-WRITE leaves an uncommitted (no
+        # _SUCCESS) v{bid} directory behind — the replay must be able
+        # to rewrite it, and overwriting an uncommitted version is safe
+        # by construction (nothing reads a version without _SUCCESS).
+        state.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(state_dir, f"v{batch_id}")
         )
         if latest is not None:
@@ -279,14 +319,9 @@ def mv_fold(state_dir: str):
     return _fold
 
 
-#: landing fixture layout version; bump when the chunk naming scheme
-#: changes so stale fixtures (and the state fixtures derived from
-#: their file identities) rebuild instead of mis-parsing
-MV_LANDING_VERSION = "v3"
-
 #: part files per landed chunk. A chunk landed as ONE coalesce(1) file
 #: is a single row group, so every downstream read of it — the
-#: micro-batch trigger's scan AND the apply twin's arriving-chunk scan
+#: micro-batch trigger's scan AND the apply step's arriving-chunk scan
 #: — is a single task regardless of cores (the r11 verdict's
 #: "driver-serial I/O inside a benched query"). Landing each chunk as
 #: N_CHUNK_FILES deterministic part files parallelizes both, and the
@@ -294,6 +329,14 @@ MV_LANDING_VERSION = "v3"
 #: sizes row-group-scale at the test SFs; a production landing sizes
 #: this to arriving-partition bytes / maxPartitionBytes.
 N_CHUNK_FILES = 8
+
+#: files per replay trigger: one chunk PAIR (r14). Each micro-batch pays
+#: a fixed offsets-log + listing + planning tax that dominated the replay
+#: and swung 3x between clean runs; pairs halve the batches while the
+#: replay still folds more than one of them (2 over 4 chunks). Every
+#: family's merge is associative, so trigger grouping cannot change a
+#: result.
+REPLAY_FILES_PER_TRIGGER = 2 * N_CHUNK_FILES
 
 
 def _ensure_chunk_landing(
@@ -387,604 +430,183 @@ def _primed_marker_ok(primed_path: str, identity: str) -> bool:
         return False
 
 
-def _ensure_mv_landing(spark: SparkSession, sf_dir: str) -> str:
-    from ..operators.scans import _land_dir
-
-    e = table(spark, sf_dir, "events")
-    day = F.expr(f"unix_micros(cast(ts as timestamp)) div {MV_DAY_US}")
-    return _ensure_chunk_landing(
-        _land_dir(sf_dir, "mv_chunks"),
-        e.select(
-            "event_type", "value", (day % MV_CHUNKS).alias("__chunk")
-        ),
-        MV_CHUNKS,
-        MV_LANDING_VERSION,
+def _land(spark: SparkSession, sf_dir: str, family: FoldFamily):
+    """Land ``family``'s chunks (once per sf_dir); returns the landing
+    dir and the landed rows' schema."""
+    src = family.source(spark, sf_dir)
+    land = _ensure_chunk_landing(
+        _land_dir(sf_dir, family.land_name),
+        src,
+        family.n_chunks,
+        family.landing_version,
     )
+    return land, src.drop("__chunk").schema
 
 
-def stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming incremental materialized-view maintenance — the
-    streaming twin of agg_incremental_merge: events arrive as
-    micro-batches (one chunk-sized group of landed part files per
-    trigger; the fold is an associative merge, so trigger grouping is
-    free to differ from chunk boundaries without changing the state), a
-    foreachBatch sink folds each batch's (event_type, count, int-cent
-    sum) partials into a parquet state table, and the FINAL state must
-    equal a from-scratch aggregate — the oracle IS the full recompute,
-    so the driver's hash check proves no batch boundary lost or
-    double-counted anything.
+def replay(spark: SparkSession, sf_dir: str, family: FoldFamily) -> DataFrame:
+    """Fold ALL of ``family``'s landed chunks through an availableNow
+    stream (:func:`versioned_fold` as the foreachBatch sink, from fresh
+    state) and project the final state.
 
-    Mergeability discipline: the state stores associative partials
-    (n, c), never finals. A fold (sum) is NOT naturally idempotent the
-    way last-wins MERGE is, and foreachBatch is at-least-once — a
-    replayed batch_id would double-count. State is therefore versioned
-    by batch_id (see ``mv_fold``): a replayed batch at or below the
-    highest committed version is a no-op (ADVICE r5), detection is a
-    driver directory listing (no Spark job), and each fold writes a
-    FRESH version directory — no read-modify-overwrite, so no eager
-    localCheckpoint to break lineage. At sf1 those two per-batch jobs
-    were ~40% of wall-clock (4.64 s -> see SCALE.md §18).
-
-    At 100 TB: state is |group| rows (metadata-sized); each refresh
-    touches only the arriving partition — the streaming form of "never
-    rescan history".
+    This is a statement about replay: full-data work plus micro-batch
+    machinery (offsets log, per-trigger listing and planning, state
+    versioning I/O). The steady-state refresh cost is :func:`apply_step`.
     """
-    import os
-    import shutil
-    import uuid
-
-    from ..operators.aggregates import unscale
-    from ..session import ensure_session_defaults
-
     ensure_session_defaults(spark)
-    land = _ensure_mv_landing(spark, sf_dir)
+    land, schema = _land(spark, sf_dir, family)
     state_dir = land + "_state"
     shutil.rmtree(state_dir, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema("event_type string, value double")
-        .option("maxFilesPerTrigger", N_CHUNK_FILES)
-        .parquet(land)
-    )
-
     q = (
-        stream.writeStream.foreachBatch(mv_fold(state_dir))
-        .queryName(f"mv_refresh_{uuid.uuid4().hex[:12]}")
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", REPLAY_FILES_PER_TRIGGER)
+        .parquet(land)
+        .writeStream.foreachBatch(versioned_fold(state_dir, family))
+        .queryName(f"{family.land_name}_{uuid.uuid4().hex[:12]}")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    final_v = _mv_latest_version(state_dir)
-    return spark.read.parquet(
-        os.path.join(state_dir, f"v{final_v}")
-    ).select(
-        "event_type",
-        F.col("n").alias("n_events"),
-        unscale(F.col("c"), 2).alias("sum_value"),
+    final_v = _latest_version(state_dir)
+    return family.final(
+        spark.read.parquet(os.path.join(state_dir, f"v{final_v}"))
     )
 
 
-def _mv_oracle() -> str:
-    from ..operators.aggregates import ORACLE_AGG_INCREMENTAL_MERGE
+def apply_step(
+    spark: SparkSession, sf_dir: str, family: FoldFamily
+) -> DataFrame:
+    """ONE incremental refresh of ``family``: the state is current
+    through yesterday (partials of chunks 0..n-2, a cached parquet
+    fixture primed once per sf_dir, same discipline as scd2_apply's
+    landed history), one new chunk lands; work = ``partial`` over the
+    arriving chunk + ``merge`` with the metadata-sized state.
 
-    return ORACLE_AGG_INCREMENTAL_MERGE
-
-
-def stream_mv_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE incremental MV refresh step — the delta-only cost the
-    continuous-aggregate pattern exists to buy (stream_mv_refresh's
-    batch-apply twin, exactly like scd2_apply next to scd2_build).
-
-    stream_mv_refresh replays ALL chunks through the fold, so its
-    wall-clock is full-data work plus 4x micro-batch machinery — a
-    statement about replay, not about steady-state refresh. THIS query
-    answers the production question: the MV is current through
-    yesterday (state folded from chunks 0..n-2, a cached fixture, same
-    discipline as scd2_apply's landed history), one new day-chunk
-    lands, what does bringing the MV current cost? Work = scan ONE
-    arriving chunk + merge with metadata-sized state; the oracle is the
-    from-scratch aggregate over ALL events, so the driver's hash check
-    proves the shortcut loses nothing — and the bench ratio measures
-    incremental refresh vs the full recompute a stateless engine must
-    run.
-
-    At 100 TB: this is the number that matters — refresh cost scales
-    with the arriving partition, never with history.
+    The ``_PRIMED`` marker records WHICH prior files the state covers,
+    so a rebuilt landing (new file identities) re-primes instead of
+    pairing stale state with a fresh last chunk (ADVICE r11).
     """
-    import os
-    import shutil
-
-    from ..operators.aggregates import scaled_long, unscale
-    from ..session import ensure_session_defaults
-
     ensure_session_defaults(spark)
-    land = _ensure_mv_landing(spark, sf_dir)
-    groups = _chunk_groups(land, MV_CHUNKS)
-    prior = [f for g in groups[: MV_CHUNKS - 1] for f in g]
-    last = groups[MV_CHUNKS - 1]
-    state_dir = land + "_prior_state"
-    done = os.path.join(state_dir, "_PRIMED")
-    identity = "\n".join(prior)
-    if not _primed_marker_ok(done, identity):
-        # prime once per sf_dir: fold chunks 0..n-2 into the state
-        # fixture (the "MV current through yesterday" precondition);
-        # the marker records WHICH prior files the state covers, so a
-        # rebuilt landing re-primes instead of reusing stale state
-        shutil.rmtree(state_dir, ignore_errors=True)
-        spark.read.parquet(*[os.path.join(land, f) for f in prior]).groupBy(
-            "event_type"
-        ).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(scaled_long("value")).alias("c"),
-        ).coalesce(1).write.mode("overwrite").parquet(state_dir)
-        with open(done, "w") as f:
-            f.write(identity)
-    part = (
-        spark.read.parquet(*[os.path.join(land, f) for f in last])
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(scaled_long("value")).alias("c"),
-        )
-    )
-    state = spark.read.parquet(state_dir)
-    merged = (
-        state.unionByName(part)
-        .groupBy("event_type")
-        .agg(F.sum("n").alias("n"), F.sum("c").alias("c"))
-    )
-    return merged.select(
-        "event_type",
-        F.col("n").alias("n_events"),
-        unscale(F.col("c"), 2).alias("sum_value"),
-    )
-
-
-#: drift monitor micro-batch chunks (one chunk-sized file group per
-#: trigger; see N_CHUNK_FILES)
-DRIFT_CHUNKS = 4
-DRIFT_LANDING_VERSION = "v2"
-
-
-def _ensure_drift_landing(spark: SparkSession, sf_dir: str) -> str:
-    from ..operators.scans import _land_dir
-
-    o = table(spark, sf_dir, "orders")
-    return _ensure_chunk_landing(
-        _land_dir(sf_dir, "drift_chunks"),
-        o.select(
-            "o_orderkey", "o_orderdate", "o_orderstatus",
-            "o_orderpriority", "o_totalprice",
-            (F.col("o_orderkey") % DRIFT_CHUNKS).alias("__chunk"),
-        ),
-        DRIFT_CHUNKS,
-        DRIFT_LANDING_VERSION,
-    )
-
-
-def drift_fold(state_dir: str):
-    """foreachBatch fold for the streaming drift monitor: merge the
-    batch's (feature, category, cnt_ref, cnt_cur) count partials into
-    the parquet state table. Same replay discipline as mv_fold: counts
-    are not idempotent and foreachBatch is at-least-once — state is
-    VERSIONED by batch_id (``v{bid}`` dirs, driver-side listing), so
-    replay detection costs no Spark job and the fresh-directory write
-    needs no lineage-breaking localCheckpoint (those two per-batch jobs
-    were ~40% of sf1 wall-clock in the overwrite-in-place form,
-    SCALE.md §18 — the r12 rewrite brings drift/topk onto the pattern
-    mv_fold already used)."""
-    import os
-    import shutil
-
-    from ..operators.quality import drift_pairs
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        bspark = batch_df.sparkSession
-        latest = _mv_latest_version(state_dir)
-        if latest is not None and batch_id <= latest:
-            return  # at-least-once replay: already folded, skip
-        part = drift_pairs(batch_df).groupBy("feature", "category").agg(
-            F.sum("is_ref").alias("cnt_ref"),
-            F.sum(F.lit(1) - F.col("is_ref")).alias("cnt_cur"),
-        )
-        if latest is not None:
-            state = bspark.read.parquet(
-                os.path.join(state_dir, f"v{latest}")
-            )
-            part = (
-                state.unionByName(part)
-                .groupBy("feature", "category")
-                .agg(
-                    F.sum("cnt_ref").alias("cnt_ref"),
-                    F.sum("cnt_cur").alias("cnt_cur"),
-                )
-            )
-        part.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{batch_id}")
-        )
-        if latest is not None:
-            shutil.rmtree(
-                os.path.join(state_dir, f"v{latest}"), ignore_errors=True
-            )
-
-    return _fold
-
-
-def stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming drift monitor — the streaming twin of ``dq_drift``:
-    order rows arrive as micro-batches (one chunk-sized group of landed
-    part files per trigger; the count fold is an associative merge, so
-    trigger grouping is free to differ from chunk boundaries without
-    changing the state), a foreachBatch sink folds each batch's (feature,
-    category) count partials into a parquet state table, and the final
-    TVD computed FROM THE FOLDED STATE must equal the batch audit's
-    from-scratch answer — the oracle IS ``ORACLE_DQ_DRIFT``, so the
-    driver's hash check proves no micro-batch boundary lost or
-    double-counted a category.
-
-    This is the production shape of drift monitoring: the reference
-    window's counts are state, each arriving drop updates them
-    incrementally, and the alert statistic is recomputed from
-    metadata-sized partials — never by rescanning history. TVD's
-    integer-exact numerator is what makes the streaming fold
-    hash-comparable to the batch recompute (a PSI fold would
-    accumulate float error per batch).
-
-    At 100 TB: state is |feature x category| rows; per refresh cost is
-    one aggregate over the arriving partition plus a state-table
-    overwrite, exactly like stream_mv_refresh.
-    """
-    import shutil
-    import uuid
-
-    from ..operators.quality import drift_tvd
-    from ..session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
-    # landing is the "drops arriving" fixture (see stream_mv_refresh):
-    # build once per sf_dir, reuse across calls; the fold is fresh.
-    land = _ensure_drift_landing(spark, sf_dir)
-    state_dir = land + "_state"
-    shutil.rmtree(state_dir, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(
-            "o_orderkey long, o_orderdate timestamp, o_orderstatus string, "
-            "o_orderpriority string, o_totalprice double"
-        )
-        .option("maxFilesPerTrigger", N_CHUNK_FILES)
-        .parquet(land)
-    )
-    q = (
-        stream.writeStream.foreachBatch(drift_fold(state_dir))
-        .queryName(f"drift_{uuid.uuid4().hex[:12]}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import os
-
-    final_v = _mv_latest_version(state_dir)
-    counts = spark.read.parquet(
-        os.path.join(state_dir, f"v{final_v}")
-    ).select("feature", "category", "cnt_ref", "cnt_cur")
-    return drift_tvd(counts)
-
-
-def _drift_oracle() -> str:
-    from ..operators.quality import ORACLE_DQ_DRIFT
-
-    return ORACLE_DQ_DRIFT
-
-
-def stream_drift_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE incremental drift-monitor refresh step — stream_drift's
-    batch-apply twin, completing the replay/steady-state pair the
-    mv_refresh/mv_apply and scd2_build/scd2_apply rows already have
-    (r10 verdict item 2).
-
-    stream_drift replays ALL chunks through availableNow micro-batch
-    machinery (DRIFT_CHUNKS triggers, a full state overwrite per
-    trigger) — a replay-stress statement. THIS query answers the
-    production question: counts are current through the last drop
-    (state folded from chunks 0..n-2, a cached parquet fixture primed
-    once per sf_dir), one new drop lands, what does bringing the TVD
-    alert current cost? Work = one aggregate over the arriving chunk +
-    a merge with the metadata-sized (feature, category) state. The
-    oracle is dq_drift's from-scratch SQL over ALL orders, so the
-    driver's hash check proves the incremental fold loses nothing.
-
-    At 100 TB: refresh cost scales with the arriving partition, never
-    with the reference window's history.
-    """
-    import os
-    import shutil
-
-    from ..operators.quality import drift_pairs, drift_tvd
-    from ..session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
-    # same landing fixture as stream_drift (build once per sf_dir)
-    land = _ensure_drift_landing(spark, sf_dir)
-    groups = _chunk_groups(land, DRIFT_CHUNKS)
-    prior = [f for g in groups[: DRIFT_CHUNKS - 1] for f in g]
-    last = groups[DRIFT_CHUNKS - 1]
+    land, _ = _land(spark, sf_dir, family)
+    groups = _chunk_groups(land, family.n_chunks)
+    prior = [f for g in groups[:-1] for f in g]
     state_dir = land + "_prior_state"
     primed = os.path.join(state_dir, "_PRIMED")
     identity = "\n".join(prior)
 
-    def chunk_counts(df: DataFrame) -> DataFrame:
-        return drift_pairs(df).groupBy("feature", "category").agg(
-            F.sum("is_ref").alias("cnt_ref"),
-            F.sum(F.lit(1) - F.col("is_ref")).alias("cnt_cur"),
-        )
+    def rows(files: list[str]) -> DataFrame:
+        return spark.read.parquet(*[os.path.join(land, f) for f in files])
 
     if not _primed_marker_ok(primed, identity):
-        # prime once per sf_dir: fold chunks 0..n-2 into the state
-        # fixture (the "monitor current through yesterday" precondition);
-        # the marker records WHICH prior files the state covers
         shutil.rmtree(state_dir, ignore_errors=True)
-        chunk_counts(
-            spark.read.parquet(*[os.path.join(land, f) for f in prior])
-        ).coalesce(1).write.mode("overwrite").parquet(state_dir)
+        family.partial(rows(prior)).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(state_dir)
         with open(primed, "w") as f:
             f.write(identity)
-    part = chunk_counts(
-        spark.read.parquet(*[os.path.join(land, f) for f in last])
+    state = spark.read.parquet(state_dir)
+    return family.final(
+        family.merge(state.unionByName(family.partial(rows(groups[-1]))))
     )
-    state = spark.read.parquet(state_dir).select(
-        "feature", "category", "cnt_ref", "cnt_cur"
-    )
-    merged = (
-        state.unionByName(part)
-        .groupBy("feature", "category")
-        .agg(
-            F.sum("cnt_ref").alias("cnt_ref"),
-            F.sum("cnt_cur").alias("cnt_cur"),
-        )
-    )
-    return drift_tvd(merged)
 
+
+#: MV refresh: day-chunked events; state is (event_type, count,
+#: int-cent sum) — associative partials (n, c), never finals — and the
+#: oracle is agg_incremental_merge's full recompute.
+MV_CHUNKS = 4
+MV_DAY_US = 86_400_000_000
+
+MV = FoldFamily(
+    land_name="mv_chunks",
+    landing_version="v3",
+    n_chunks=MV_CHUNKS,
+    source=lambda spark, sf_dir: table(spark, sf_dir, "events").select(
+        "event_type",
+        "value",
+        (
+            F.expr(f"unix_micros(cast(ts as timestamp)) div {MV_DAY_US}")
+            % MV_CHUNKS
+        ).alias("__chunk"),
+    ),
+    partial=lambda df: df.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(scaled_long("value")).alias("c"),
+    ),
+    merge=lambda df: df.groupBy("event_type").agg(
+        F.sum("n").alias("n"), F.sum("c").alias("c")
+    ),
+    final=lambda state: state.select(
+        "event_type",
+        F.col("n").alias("n_events"),
+        unscale(F.col("c"), 2).alias("sum_value"),
+    ),
+)
+
+#: drift monitor: order drops arrive; state is the (feature, category)
+#: reference/current counts and the alert statistic is recomputed from
+#: them, never by rescanning history. TVD's integer-exact numerator is
+#: what makes the fold hash-comparable to the batch dq_drift recompute
+#: (a PSI fold would accumulate float error per batch).
+DRIFT_CHUNKS = 4
+
+DRIFT = FoldFamily(
+    land_name="drift_chunks",
+    landing_version="v2",
+    n_chunks=DRIFT_CHUNKS,
+    source=lambda spark, sf_dir: table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderdate", "o_orderstatus",
+        "o_orderpriority", "o_totalprice",
+        (F.col("o_orderkey") % DRIFT_CHUNKS).alias("__chunk"),
+    ),
+    partial=lambda df: drift_pairs(df).groupBy("feature", "category").agg(
+        F.sum("is_ref").alias("cnt_ref"),
+        F.sum(F.lit(1) - F.col("is_ref")).alias("cnt_cur"),
+    ),
+    merge=lambda df: df.groupBy("feature", "category").agg(
+        F.sum("cnt_ref").alias("cnt_ref"),
+        F.sum("cnt_cur").alias("cnt_cur"),
+    ),
+    final=drift_tvd,
+)
 
 #: streaming top-K: chunks landed / K kept per series
 TOPK_CHUNKS = 4
 TOPK_K = 5
-TOPK_LANDING_VERSION = "v2"
 
 
-def _ensure_topk_landing(spark: SparkSession, sf_dir: str) -> str:
-    from ..operators.scans import _land_dir
-
-    e = table(spark, sf_dir, "events")
-    return _ensure_chunk_landing(
-        _land_dir(sf_dir, "topk_chunks"),
-        e.select(
-            "event_id", "event_type", "value",
-            (F.col("event_id") % TOPK_CHUNKS).alias("__chunk"),
-        ),
-        TOPK_CHUNKS,
-        TOPK_LANDING_VERSION,
-    )
-
-
-def topk_fold(state_dir: str):
-    """foreachBatch fold for the streaming top-K leaderboard: prune the
-    arriving batch to its per-series top-K, union with the K-row state,
-    re-prune, overwrite. Top-K is a SEMILATTICE merge —
-    ``topK(A ∪ B) = topK(topK(A) ∪ topK(B))`` — so the fold is
-    associative and batch-order-independent, and state never exceeds
-    K x |series| rows no matter how much history streamed through.
-    Same at-least-once replay guard as mv_fold/drift_fold (top-K merge
-    is idempotent for REPEATED rows but the guard keeps the discipline
-    uniform and the batch work skippable): state is VERSIONED by
-    batch_id, so replay detection is a driver-side directory listing —
-    no ``max(last_bid)`` Spark job, no localCheckpoint (SCALE.md §18's
-    two-jobs-per-batch tax, removed r12)."""
-    import os
-    import shutil
-
-    from pyspark.sql import Window
-
-    def _prune(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("event_type").orderBy(
-            F.col("v_c").desc(), F.col("event_id").desc()
-        )
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= TOPK_K)
-            .drop("rn")
-        )
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.aggregates import scaled_long
-
-        bspark = batch_df.sparkSession
-        latest = _mv_latest_version(state_dir)
-        if latest is not None and batch_id <= latest:
-            return  # at-least-once replay: already folded, skip
-        part = _prune(
-            batch_df.select(
-                "event_type", "event_id", scaled_long("value").alias("v_c")
-            )
-        )
-        if latest is not None:
-            state = bspark.read.parquet(
-                os.path.join(state_dir, f"v{latest}")
-            )
-            part = _prune(
-                state.select("event_type", "event_id", "v_c").unionByName(
-                    part
-                )
-            )
-        part.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{batch_id}")
-        )
-        if latest is not None:
-            shutil.rmtree(
-                os.path.join(state_dir, f"v{latest}"), ignore_errors=True
-            )
-
-    return _fold
-
-
-def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming per-series top-K leaderboard — the continuously
-    maintained "largest transactions" board every ops dashboard has.
-    Events arrive as micro-batches (one chunk-sized group of landed
-    part files per trigger; the prune-merge is associative and
-    commutative, so trigger grouping is free to differ from chunk
-    boundaries without changing the state); a
-    foreachBatch fold keeps only K rows per series as state (the
-    semilattice prune-merge in :func:`topk_fold`); the final
-    leaderboard read FROM STATE must equal the from-scratch ranking
-    over all events — the oracle is that one-shot SQL, so the driver's
-    hash check proves no batch boundary dropped a contender.
-
-    Windowed ranking is not expressible as a built-in streaming
-    aggregate (rank needs its peers); the bounded prune-merge fold is
-    the standard scalable answer: per-batch work is a TakeOrdered over
-    the arriving chunk, state is K x |series| rows forever. At 100 TB
-    that is the difference between maintaining a leaderboard and
-    re-sorting history per refresh. Ordering is exact integer cents
-    with event_id tiebreak, so the fold and the oracle agree
-    bit-for-bit.
-    """
-    import shutil
-    import uuid
-
-    from ..operators.aggregates import unscale
-    from ..session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
-    land = _ensure_topk_landing(spark, sf_dir)
-    state_dir = land + "_state"
-    shutil.rmtree(state_dir, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(
-            "event_id long, event_type string, value double"
-        )
-        # replay in CHUNK-PAIR batches (r14, the r13 verdict's
-        # stream_topk item): the fold is associative/commutative so
-        # trigger grouping is free (docstring above), and each
-        # micro-batch pays a fixed offsets-log + listing + planning
-        # tax that dominated the replay and swung 3x between clean
-        # runs — half the batches, half the machinery, the multi-batch
-        # fold still exercised (2 batches over 4 chunks)
-        .option("maxFilesPerTrigger", 2 * N_CHUNK_FILES)
-        .parquet(land)
-    )
-    q = (
-        stream.writeStream.foreachBatch(topk_fold(state_dir))
-        .queryName(f"topk_{uuid.uuid4().hex[:12]}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import os
-
-    from pyspark.sql import Window
-
+def _topk_ranked(df: DataFrame) -> DataFrame:
+    """The top TOPK_K rows per series, ranked in ``rnk``. Ordering is
+    exact integer cents with event_id tiebreak, so fold and oracle agree
+    bit-for-bit."""
     w = Window.partitionBy("event_type").orderBy(
         F.col("v_c").desc(), F.col("event_id").desc()
     )
-    final_v = _mv_latest_version(state_dir)
-    return (
-        spark.read.parquet(os.path.join(state_dir, f"v{final_v}"))
-        .select("event_type", "event_id", "v_c")
-        .withColumn("rnk", F.row_number().over(w))
-        .select(
-            "event_type",
-            "rnk",
-            "event_id",
-            unscale(F.col("v_c")).alias("value"),
-        )
+    return df.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= TOPK_K
     )
 
 
-def stream_topk_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE incremental leaderboard refresh — stream_topk's batch-apply
-    twin, completing the replay/steady-state pair the mv_refresh/
-    mv_apply and drift/drift_apply rows have.
-
-    stream_topk replays ALL chunks through availableNow micro-batch
-    machinery (a replay-stress statement). THIS query answers the
-    production question: the board is current through the last drop
-    (state = K x |series| rows pruned from chunks 0..n-2, a cached
-    parquet fixture primed once per sf_dir), one new chunk lands, what
-    does bringing the leaderboard current cost? Work = TakeOrdered
-    over the arriving chunk + a K-row merge. The oracle is the
-    from-scratch ranking over ALL events, so the driver's hash check
-    proves the semilattice prune loses no contender.
-
-    At 100 TB: refresh cost scales with the arriving chunk; state
-    never grows past K x |series| no matter how much history streamed.
-    """
-    import os
-    import shutil
-
-    from pyspark.sql import Window
-
-    from ..operators.aggregates import scaled_long, unscale
-    from ..session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
-    # same landing fixture as stream_topk (build once per sf_dir)
-    land = _ensure_topk_landing(spark, sf_dir)
-    groups = _chunk_groups(land, TOPK_CHUNKS)
-    prior = [f for g in groups[: TOPK_CHUNKS - 1] for f in g]
-    last = groups[TOPK_CHUNKS - 1]
-    state_dir = land + "_prior_state"
-    primed = os.path.join(state_dir, "_PRIMED")
-    identity = "\n".join(prior)
-
-    def prune(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("event_type").orderBy(
-            F.col("v_c").desc(), F.col("event_id").desc()
-        )
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= TOPK_K)
-            .drop("rn")
-        )
-
-    def cents(df: DataFrame) -> DataFrame:
-        return df.select(
-            "event_type", "event_id", scaled_long("value").alias("v_c")
-        )
-
-    if not _primed_marker_ok(primed, identity):
-        # prime once per sf_dir: prune chunks 0..n-2 into the K-row
-        # state fixture (the "board current through yesterday" setup);
-        # the marker records WHICH prior files the state covers, so a
-        # rebuilt landing (new file identities) re-primes instead of
-        # pairing stale state with a fresh 'last' chunk (ADVICE r11)
-        shutil.rmtree(state_dir, ignore_errors=True)
-        prune(
-            cents(spark.read.parquet(*[os.path.join(land, f) for f in prior]))
-        ).coalesce(1).write.mode("overwrite").parquet(state_dir)
-        with open(primed, "w") as f:
-            f.write(identity)
-    part = prune(
-        cents(spark.read.parquet(*[os.path.join(land, f) for f in last]))
-    )
-    state = spark.read.parquet(state_dir).select(
-        "event_type", "event_id", "v_c"
-    )
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("v_c").desc(), F.col("event_id").desc()
-    )
-    return (
-        state.unionByName(part)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOPK_K)
-        .select(
-            "event_type",
-            "rnk",
-            "event_id",
-            unscale(F.col("v_c")).alias("value"),
-        )
-    )
+#: top-K leaderboard: the state is the K best rows per series. Top-K is a
+#: SEMILATTICE merge — ``topK(A ∪ B) = topK(topK(A) ∪ topK(B))`` — so the
+#: fold is associative and batch-order-independent, and state never
+#: exceeds K x |series| rows no matter how much history streamed through
+#: (windowed ranking is not a built-in streaming aggregate; this bounded
+#: prune-merge is the standard scalable answer).
+TOPK = FoldFamily(
+    land_name="topk_chunks",
+    landing_version="v2",
+    n_chunks=TOPK_CHUNKS,
+    source=lambda spark, sf_dir: table(spark, sf_dir, "events").select(
+        "event_id", "event_type", "value",
+        (F.col("event_id") % TOPK_CHUNKS).alias("__chunk"),
+    ),
+    partial=lambda df: _topk_ranked(
+        df.select("event_type", "event_id", scaled_long("value").alias("v_c"))
+    ).drop("rnk"),
+    merge=lambda df: _topk_ranked(df).drop("rnk"),
+    final=lambda state: _topk_ranked(state).select(
+        "event_type", "rnk", "event_id", unscale(F.col("v_c")).alias("value")
+    ),
+)
 
 
 ORACLE_STREAM_TOPK = f"""
@@ -1012,7 +634,7 @@ WHERE rnk <= {TOPK_K}
 #: sf1 ratio priced Spark's multi-batch replay against an engine doing
 #: a single pass — a structural mismatch, annotated since r11. The
 #: chunk assignment is ``event_id % TOPK_CHUNKS`` (deterministic, see
-#: _ensure_topk_landing) and the r14 replay groups chunk PAIRS per
+#: the TOPK family's source) and the r14 replay groups chunk PAIRS per
 #: trigger, so DuckDB can fold the IDENTICAL two batches: per-batch
 #: top-K prune, then prune-merge — the same semilattice fold
 #: ``topK(topK(b1) ∪ topK(b2))``, whose result provably equals the
@@ -1057,32 +679,38 @@ QUERIES = {
         doc="MERGE upsert across scheduled runs (PATCH/POST sync), task.ts:228-271",
     ),
     "stream_mv_refresh": spec(
-        stream_mv_refresh, _mv_oracle(), "beyond",
+        lambda spark, sf_dir: replay(spark, sf_dir, MV),
+        ORACLE_AGG_INCREMENTAL_MERGE, "beyond",
         doc="streaming incremental MV: foreachBatch partial folds == "
             "full recompute (oracle is the rescan)",
     ),
     "stream_mv_apply": spec(
-        stream_mv_apply, _mv_oracle(), "beyond",
+        lambda spark, sf_dir: apply_step(spark, sf_dir, MV),
+        ORACLE_AGG_INCREMENTAL_MERGE, "beyond",
         doc="one delta-only MV refresh step from cached state == full "
             "recompute (the steady-state incremental cost)",
     ),
     "stream_drift": spec(
-        stream_drift, _drift_oracle(), "beyond",
+        lambda spark, sf_dir: replay(spark, sf_dir, DRIFT),
+        ORACLE_DQ_DRIFT, "beyond",
         doc="streaming drift monitor: micro-batch count folds -> TVD "
             "== batch dq_drift recompute (oracle is dq_drift's SQL)",
     ),
     "stream_drift_apply": spec(
-        stream_drift_apply, _drift_oracle(), "beyond",
+        lambda spark, sf_dir: apply_step(spark, sf_dir, DRIFT),
+        ORACLE_DQ_DRIFT, "beyond",
         doc="one delta-only drift refresh from cached count state == "
             "full dq_drift recompute (the steady-state incremental cost)",
     ),
     "stream_topk": spec(
-        stream_topk, ORACLE_STREAM_TOPK, "beyond",
+        lambda spark, sf_dir: replay(spark, sf_dir, TOPK),
+        ORACLE_STREAM_TOPK, "beyond",
         doc="streaming per-series top-K leaderboard via bounded "
             "semilattice prune-merge fold (oracle: one-shot ranking)",
     ),
     "stream_topk_apply": spec(
-        stream_topk_apply, ORACLE_STREAM_TOPK, "beyond",
+        lambda spark, sf_dir: apply_step(spark, sf_dir, TOPK),
+        ORACLE_STREAM_TOPK, "beyond",
         doc="one delta-only leaderboard refresh from cached K-row "
             "state == full re-ranking (the steady-state incremental "
             "cost)",

@@ -466,6 +466,17 @@ def test_stream_topk_twin_equals_one_shot_oracle():
     assert len(a) > 0
 
 
+def test_driver_heap_default_is_half_the_host_capped_at_16g():
+    """The default driver heap fits the host: half of physical memory,
+    never more than 16g."""
+    from etl_verkada_spark.session import _default_driver_memory
+
+    gib = 1 << 30
+    assert _default_driver_memory(15 * gib) == "7680m"
+    assert _default_driver_memory(125 * gib) == "16384m"
+    assert _default_driver_memory(32 * gib) == "16384m"
+
+
 def test_shuffle_partitions_follow_cpu_knob(monkeypatch):
     """The driver benches at lower SPARK_GRAFT_CPUS to measure scaling;
     shuffle partitions must track the knob (one wave per stage) rather

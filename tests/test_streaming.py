@@ -3,13 +3,23 @@ streams (readStream + availableNow) must agree with their batch forms."""
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from etl_verkada_spark.catalog import table
 from etl_verkada_spark.streaming.upsert import (
+    DRIFT,
+    MV,
+    TOPK,
+    _latest_version,
+    apply_step,
     foreach_batch_merge,
     merge_last_wins,
+    replay,
+    versioned_fold,
 )
 from etl_verkada_spark.streaming.windows import tumbling, with_watermark_tumbling
 
@@ -107,8 +117,6 @@ def test_foreach_batch_merge_rewrites_only_touched_buckets(spark, tmp_path):
     """The S9 state sink is a partition-scoped MERGE (VERDICT r1 item 7):
     a micro-batch must rewrite only the bucket partitions its keys hash
     into, leaving every other bucket's files untouched on disk."""
-    import os
-
     target = str(tmp_path / "state")
     o = table(spark, SF_SMALL, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -234,8 +242,6 @@ def test_watermark_drops_late_data(spark, tmp_path):
     keeps things moving), batch 2 delivers an event at 00:01 — far below
     the watermark — which must be DROPPED, not merged into its (already
     finalized) window."""
-    import datetime as dt
-    import os
     import time as _time
     import uuid
 
@@ -430,42 +436,31 @@ def test_streaming_ohlc_equals_batch(spark, events_dir):
 
 def test_mv_refresh_folds_multiple_microbatches(spark):
     """The incremental claim needs >1 fold: the landed chunk dir must
-    hold >= MV_CHUNKS chunk files (maxFilesPerTrigger=N_CHUNK_FILES
-    then yields multiple micro-batches), and the final state must equal
-    the batch aggregate computed directly."""
+    hold MV.n_chunks chunk groups of several part files each, and the
+    final state must equal the batch aggregate computed directly."""
     import glob
+    from collections import Counter
 
-    from pyspark.sql import functions as F
-
-    from etl_verkada_spark.catalog import table as cat_table
     from etl_verkada_spark.operators.aggregates import scaled_long, unscale
     from etl_verkada_spark.operators.scans import _land_dir
-    from etl_verkada_spark.streaming.upsert import (
-        MV_CHUNKS, stream_mv_refresh,
-    )
-    from .conftest import SF_SMALL
 
     out = {
         r["event_type"]: (r["n_events"], r["sum_value"])
-        for r in stream_mv_refresh(spark, SF_SMALL).collect()
+        for r in replay(spark, SF_SMALL, MV).collect()
     }
     # deterministic chunk names: lexical order IS landing order (r10);
     # multi-file chunks: each chunk group must hold >1 part file so the
     # per-trigger scan parallelizes (r12, SCALE.md §27a — a regression
     # to coalesce(1) single-file chunks would fail here)
     files = glob.glob(_land_dir(SF_SMALL, "mv_chunks") + "/chunk_*.parquet")
-    assert len(files) >= MV_CHUNKS
-    import os
-    from collections import Counter
-
     per_chunk = Counter(
         os.path.basename(f)[: len("chunk_00")] for f in files
     )
-    assert len(per_chunk) == MV_CHUNKS
+    assert len(per_chunk) == MV.n_chunks
     assert all(n > 1 for n in per_chunk.values()), per_chunk
     want = {
         r["event_type"]: (r["n_events"], r["sum_value"])
-        for r in cat_table(spark, SF_SMALL, "events")
+        for r in table(spark, SF_SMALL, "events")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -476,46 +471,9 @@ def test_mv_refresh_folds_multiple_microbatches(spark):
     assert out == want
 
 
-def test_mv_fold_skips_replayed_batch(spark, tmp_path):
-    """foreachBatch is at-least-once: re-delivering an already-folded
-    batch_id must be a no-op (state versions are keyed by batch_id),
-    while the next batch_id folds normally and prunes the superseded
-    version."""
-    import os
-
-    from etl_verkada_spark.streaming.upsert import (
-        _mv_latest_version,
-        mv_fold,
-    )
-
-    state = str(tmp_path / "state")
-    fold = mv_fold(state)
-    b0 = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0)], "event_type string, value double"
-    )
-    b1 = spark.createDataFrame(
-        [("a", 4.0)], "event_type string, value double"
-    )
-    fold(b0, 0)
-    fold(b0, 0)  # replay: must not double-count
-    fold(b1, 1)
-    fold(b1, 1)  # replay of the newest batch too
-    assert _mv_latest_version(state) == 1
-    row = spark.read.parquet(os.path.join(state, "v1")).collect()[0]
-    assert (row.event_type, row.n) == ("a", 3)
-    assert not os.path.exists(os.path.join(state, "v0")), (
-        "superseded version must be pruned after commit"
-    )
-    # an uncommitted (no _SUCCESS) version must be invisible
-    os.makedirs(os.path.join(state, "v7"))
-    assert _mv_latest_version(state) == 1
-
-
 def test_read_state_propagates_non_missing_errors(spark, tmp_path):
     """Only PATH_NOT_FOUND means 'first batch'; a corrupt state file
     must raise, not silently reset the accumulator."""
-    import pytest
-
     from etl_verkada_spark.streaming.upsert import _read_state
 
     assert _read_state(spark, str(tmp_path / "nope")) is None
@@ -526,129 +484,129 @@ def test_read_state_propagates_non_missing_errors(spark, tmp_path):
         _read_state(spark, str(bad)).collect()
 
 
+def _drift_audit(rows):
+    return {
+        r["feature"]: (r["n_ref"], r["n_cur"], r["n_categories"], r["tvd"])
+        for r in rows
+    }
+
+
 def test_stream_drift_equals_batch_audit(spark):
     """The streaming drift monitor's folded-state TVD must equal the
     batch dq_drift recompute exactly — including the integer-exact
-    numerator path — across >= DRIFT_CHUNKS micro-batches."""
-    import glob
-
+    numerator path."""
     from etl_verkada_spark.operators.quality import dq_drift
-    from etl_verkada_spark.operators.scans import _land_dir
-    from etl_verkada_spark.streaming.upsert import DRIFT_CHUNKS, stream_drift
-    from .conftest import SF_SMALL
 
-    got = {
-        r["feature"]: (r["n_ref"], r["n_cur"], r["n_categories"], r["tvd"])
-        for r in stream_drift(spark, SF_SMALL).collect()
-    }
-    # deterministic multi-file chunks: chunk_NN_pNN.parquet (r12)
-    files = glob.glob(
-        _land_dir(SF_SMALL, "drift_chunks") + "/chunk_*.parquet"
-    )
-    assert len(files) >= DRIFT_CHUNKS
-    want = {
-        r["feature"]: (r["n_ref"], r["n_cur"], r["n_categories"], r["tvd"])
-        for r in dq_drift(spark, SF_SMALL).collect()
-    }
-    assert got == want
+    got = _drift_audit(replay(spark, SF_SMALL, DRIFT).collect())
+    assert got == _drift_audit(dq_drift(spark, SF_SMALL).collect())
 
 
 def test_stream_drift_apply_equals_batch_audit(spark):
     """ONE delta-only drift refresh from the cached prior-state fixture
-    must equal the batch dq_drift recompute exactly — the steady-state
-    twin of the replay test above (the scd2_apply discipline). Run
-    twice: the second call exercises the already-primed path."""
+    must equal the batch dq_drift recompute exactly (the scd2_apply
+    discipline). Run twice: the second call exercises the already-primed
+    path."""
     from etl_verkada_spark.operators.quality import dq_drift
-    from etl_verkada_spark.streaming.upsert import stream_drift_apply
-    from .conftest import SF_SMALL
 
-    want = {
-        r["feature"]: (r["n_ref"], r["n_cur"], r["n_categories"], r["tvd"])
-        for r in dq_drift(spark, SF_SMALL).collect()
-    }
+    want = _drift_audit(dq_drift(spark, SF_SMALL).collect())
     for _ in range(2):
-        got = {
-            r["feature"]: (r["n_ref"], r["n_cur"], r["n_categories"], r["tvd"])
-            for r in stream_drift_apply(spark, SF_SMALL).collect()
-        }
-        assert got == want
+        assert _drift_audit(apply_step(spark, SF_SMALL, DRIFT).collect()) == want
 
 
-def test_drift_fold_skips_replayed_batch(spark, tmp_path):
-    """At-least-once replay of a drift batch must not double-count any
-    (feature, category) cell."""
-    from etl_verkada_spark.streaming.upsert import drift_fold
+FAMILIES = {"mv": MV, "drift": DRIFT, "topk": TOPK}
 
-    fold = drift_fold(str(tmp_path / "state"))
-    schema = (
+_EARLY, _LATE = dt.datetime(1994, 1, 1), dt.datetime(1996, 1, 1)
+
+#: per fold family: the row schema, two micro-batches, the state columns
+#: and the state after folding each batch exactly once
+FOLD_CASES = {
+    "mv": (
+        "event_type string, value double",
+        [("a", 1.0), ("a", 2.0)],
+        [("a", 4.0)],
+        ("event_type", "n", "c"),
+        [("a", 3, 700)],
+    ),
+    "drift": (
         "o_orderkey long, o_orderdate timestamp, o_orderstatus string, "
-        "o_orderpriority string, o_totalprice double"
+        "o_orderpriority string, o_totalprice double",
+        [(1, _EARLY, "O", "1-URGENT", 100.0), (2, _LATE, "F", "2-HIGH", 200.0)],
+        [(3, _LATE, "O", "1-URGENT", 300.0)],
+        ("feature", "category", "cnt_ref", "cnt_cur"),
+        [
+            ("o_orderpriority", "1-URGENT", 1, 1),
+            ("o_orderpriority", "2-HIGH", 0, 1),
+            ("o_orderstatus", "F", 0, 1),
+            ("o_orderstatus", "O", 1, 1),
+            ("o_totalprice_bin", "0", 1, 2),
+        ],
+    ),
+    "topk": (
+        "event_id long, event_type string, value double",
+        [(1, "t", 5.0)],
+        [(2, "t", 9.0)],
+        ("event_type", "event_id", "v_c"),
+        [("t", 1, 500), ("t", 2, 900)],
+    ),
+}
+
+
+def _fold_case(spark, tmp_path, name):
+    schema, rows0, rows1, cols, want = FOLD_CASES[name]
+    state = str(tmp_path / "state")
+    batches = [spark.createDataFrame(r, schema) for r in (rows0, rows1)]
+    return state, versioned_fold(state, FAMILIES[name]), batches, cols, want
+
+
+def _folded(spark, state, cols):
+    v = _latest_version(state)
+    return sorted(
+        map(tuple, spark.read.parquet(f"{state}/v{v}").select(*cols).collect())
     )
-    import datetime as dt
-    early = dt.datetime(1994, 1, 1)
-    late = dt.datetime(1996, 1, 1)
-    b0 = spark.createDataFrame(
-        [(1, early, "O", "1-URGENT", 100.0), (2, late, "F", "2-HIGH", 200.0)],
-        schema,
-    )
-    b1 = spark.createDataFrame([(3, late, "O", "1-URGENT", 300.0)], schema)
+
+
+@pytest.mark.parametrize("name", FOLD_CASES)
+def test_fold_skips_replayed_batch(spark, tmp_path, name):
+    """foreachBatch is at-least-once: re-delivering an already-folded
+    batch_id must be a no-op (state versions are keyed by batch_id),
+    while the next batch_id folds normally and prunes the superseded
+    version."""
+    state, fold, (b0, b1), cols, want = _fold_case(spark, tmp_path, name)
     fold(b0, 0)
-    fold(b0, 0)  # replay
+    fold(b0, 0)  # replay: must not double-count
     fold(b1, 1)
-    fold(b1, 1)  # replay of newest
-    from etl_verkada_spark.streaming.upsert import _mv_latest_version
-
-    sd = str(tmp_path / "state")
-    v = _mv_latest_version(sd)
-    assert v == 1  # replay of either batch must not advance the version
-    state = spark.read.parquet(f"{sd}/v{v}")
-    row = {
-        (r["feature"], r["category"]): (r["cnt_ref"], r["cnt_cur"])
-        for r in state.collect()
-    }
-    assert row[("o_orderstatus", "O")] == (1, 1)
-    assert row[("o_orderstatus", "F")] == (0, 1)
-    assert row[("o_totalprice_bin", "0")] == (1, 2)
+    fold(b1, 1)  # replay of the newest batch too
+    assert _latest_version(state) == 1
+    assert _folded(spark, state, cols) == want
+    assert not os.path.exists(os.path.join(state, "v0")), (
+        "superseded version must be pruned after commit"
+    )
+    # an uncommitted (no _SUCCESS) version must be invisible
+    os.makedirs(os.path.join(state, "v7"))
+    assert _latest_version(state) == 1
 
 
-def test_mv_fold_recovers_from_mid_write_crash(spark, tmp_path):
+@pytest.mark.parametrize("name", FOLD_CASES)
+def test_fold_recovers_from_mid_write_crash(spark, tmp_path, name):
     """A fold that died mid-write leaves an uncommitted v{bid} dir (no
     _SUCCESS). The replay of that batch_id must rewrite it and commit —
     not fail on the existing path, not skip the batch."""
-    import os
-
-    from etl_verkada_spark.streaming.upsert import (
-        _mv_latest_version,
-        mv_fold,
-    )
-
-    state = str(tmp_path / "state")
-    fold = mv_fold(state)
-    b0 = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0)], "event_type string, value double"
-    )
+    state, fold, (b0, b1), cols, want = _fold_case(spark, tmp_path, name)
     fold(b0, 0)
-    # simulate a crash during fold 1: partial dir, no _SUCCESS
     crashed = os.path.join(state, "v1")
     os.makedirs(crashed)
     with open(os.path.join(crashed, "part-garbage.parquet"), "w") as f:
         f.write("torn write")
-    assert _mv_latest_version(state) == 0
-    b1 = spark.createDataFrame(
-        [("a", 4.0)], "event_type string, value double"
-    )
+    assert _latest_version(state) == 0
     fold(b1, 1)  # the at-least-once redelivery
-    assert _mv_latest_version(state) == 1
-    row = spark.read.parquet(os.path.join(state, "v1")).collect()[0]
-    assert (row.event_type, row.n) == ("a", 3)
+    assert _latest_version(state) == 1
+    assert _folded(spark, state, cols) == want
 
 
 def test_topk_fold_is_batch_order_independent(spark, tmp_path):
     """Top-K is a semilattice merge: folding the same batches in any
     order yields the identical state (the property that makes the
     streaming leaderboard deterministic under micro-batch re-planning)."""
-    from etl_verkada_spark.streaming.upsert import topk_fold
-
     batches = [
         spark.createDataFrame(
             [(i * 100 + j, "t%d" % (j % 2), float(v))
@@ -660,18 +618,12 @@ def test_topk_fold_is_batch_order_independent(spark, tmp_path):
         )
     ]
 
-    from etl_verkada_spark.streaming.upsert import _mv_latest_version
-
     def run(order, name):
         state = str(tmp_path / name)
-        fold = topk_fold(state)
+        fold = versioned_fold(state, TOPK)
         for bid, b in enumerate(order):
             fold(b, bid)
-        v = _mv_latest_version(state)
-        return {
-            (r.event_type, r.event_id, r.v_c)
-            for r in spark.read.parquet(f"{state}/v{v}").collect()
-        }
+        return set(_folded(spark, state, ("event_type", "event_id", "v_c")))
 
     fwd = run(batches, "fwd")
     rev = run(list(reversed(batches)), "rev")
@@ -683,12 +635,10 @@ def test_topk_fold_state_stays_bounded(spark, tmp_path):
     """State after any number of folds holds at most K rows per series."""
     from collections import Counter
 
-    from etl_verkada_spark.streaming.upsert import TOPK_K, topk_fold
-
-    from etl_verkada_spark.streaming.upsert import _mv_latest_version
+    from etl_verkada_spark.streaming.upsert import TOPK_K
 
     state = str(tmp_path / "state")
-    fold = topk_fold(state)
+    fold = versioned_fold(state, TOPK)
     for bid in range(3):
         rows = [
             (bid * 1000 + i, "s", float(i % 17)) for i in range(50)
@@ -699,123 +649,55 @@ def test_topk_fold_state_stays_bounded(spark, tmp_path):
             ),
             bid,
         )
-    v = _mv_latest_version(state)
-    per = Counter(
-        r.event_type
-        for r in spark.read.parquet(f"{state}/v{v}").collect()
-    )
+    per = Counter(t for t, in _folded(spark, state, ("event_type",)))
     assert per and all(n <= TOPK_K for n in per.values()), per
 
 
-def test_topk_apply_equals_full_ranking(spark):
-    """The delta-only leaderboard refresh must equal the from-scratch
-    ranking (the semilattice prune loses no contender)."""
-    from etl_verkada_spark.streaming.upsert import (
-        TOPK_K,
-        stream_topk,
-        stream_topk_apply,
-    )
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
 
-    full = sorted(map(tuple, stream_topk(spark, SF_SMALL).collect()))
-    delta = sorted(map(tuple, stream_topk_apply(spark, SF_SMALL).collect()))
-    assert full == delta
+
+@pytest.mark.parametrize("name", FAMILIES)
+def test_apply_equals_replay(spark, name):
+    """The delta-only refresh must equal the full replay (the partials
+    lose nothing), and the replay must fold more than one micro-batch —
+    the incremental claim needs at least two folds."""
+    from etl_verkada_spark.operators.scans import _land_dir
+
+    family = FAMILIES[name]
+    full = _rows(replay(spark, SF_SMALL, family))
+    state = _land_dir(SF_SMALL, family.land_name) + "_state"
+    assert _latest_version(state) >= 1, "replay folded a single micro-batch"
     assert full
-    per = {}
-    for t, rnk, _, _ in full:
-        per[t] = max(per.get(t, 0), rnk)
-    assert all(v <= TOPK_K for v in per.values())
+    assert _rows(apply_step(spark, SF_SMALL, family)) == full
 
 
-def test_stale_prime_marker_forces_reprime(spark, tmp_path):
+@pytest.mark.parametrize("name", FAMILIES)
+def test_stale_prime_marker_forces_reprime(spark, name):
     """ADVICE r11: a _PRIMED marker left over from a PREVIOUS landing
     (different prior-file list) must NOT validate the cached state —
-    the apply twin must re-prime and still match the full ranking."""
-    import os
-
+    the apply step must re-prime and still match the full replay."""
     from etl_verkada_spark.operators.scans import _land_dir
-    from etl_verkada_spark.streaming.upsert import (
-        stream_topk, stream_topk_apply,
-    )
 
+    family = FAMILIES[name]
     # build landing + prime once
-    baseline = sorted(map(tuple, stream_topk_apply(spark, SF_SMALL).collect()))
-    land = _land_dir(SF_SMALL, "topk_chunks")
-    primed = os.path.join(land + "_prior_state", "_PRIMED")
+    baseline = _rows(apply_step(spark, SF_SMALL, family))
+    state_dir = _land_dir(SF_SMALL, family.land_name) + "_prior_state"
+    primed = os.path.join(state_dir, "_PRIMED")
     assert os.path.exists(primed)
     # corrupt the marker to simulate a marker from an older landing
     with open(primed, "w") as f:
         f.write("chunk_99_p00.parquet\nchunk_99_p01.parquet")
-    # poison the cached state so ONLY a re-prime can produce the right
-    # answer (if the stale marker were trusted, the wrong parquet
-    # below would leak into the leaderboard)
-    state_dir = land + "_prior_state"
-    spark.createDataFrame(
-        [("poison", 1, 10**15)], "event_type string, event_id long, v_c long"
-    ).coalesce(1).write.mode("append").parquet(state_dir)
-    again = sorted(map(tuple, stream_topk_apply(spark, SF_SMALL).collect()))
+    # poison the cached state (a second copy of every partial) so ONLY a
+    # re-prime can produce the right answer
+    cached = spark.read.parquet(state_dir)
+    spark.createDataFrame(cached.collect(), cached.schema).coalesce(1).write.mode(
+        "append"
+    ).parquet(state_dir)
+    again = _rows(apply_step(spark, SF_SMALL, family))
     assert again == baseline
-    assert not any(r[0] == "poison" for r in again)
     # and the re-written marker now records the real prior-file list
     with open(primed) as f:
         assert "chunk_99" not in f.read()
     # full replay still agrees
-    full = sorted(map(tuple, stream_topk(spark, SF_SMALL).collect()))
-    assert full == again
-
-
-def test_drift_and_topk_folds_recover_from_mid_write_crash(spark, tmp_path):
-    """The r12 versioned-state rewrite must keep mv_fold's crash
-    contract on both new folds: a fold that died mid-write leaves an
-    uncommitted v{bid} (no _SUCCESS); the at-least-once redelivery must
-    rewrite and commit it."""
-    import os
-
-    from etl_verkada_spark.streaming.upsert import (
-        _mv_latest_version, drift_fold, topk_fold,
-    )
-
-    # drift
-    sd = str(tmp_path / "drift")
-    fold = drift_fold(sd)
-    import datetime as dt
-    schema = (
-        "o_orderkey long, o_orderdate timestamp, o_orderstatus string, "
-        "o_orderpriority string, o_totalprice double"
-    )
-    b0 = spark.createDataFrame(
-        [(1, dt.datetime(1994, 1, 1), "O", "1-URGENT", 100.0)], schema
-    )
-    fold(b0, 0)
-    crashed = os.path.join(sd, "v1")
-    os.makedirs(crashed)
-    with open(os.path.join(crashed, "part-garbage.parquet"), "w") as f:
-        f.write("torn write")
-    assert _mv_latest_version(sd) == 0
-    fold(
-        spark.createDataFrame(
-            [(2, dt.datetime(1996, 1, 1), "F", "2-HIGH", 200.0)], schema
-        ),
-        1,
-    )
-    assert _mv_latest_version(sd) == 1
-    got = {
-        (r["feature"], r["category"]): (r["cnt_ref"], r["cnt_cur"])
-        for r in spark.read.parquet(os.path.join(sd, "v1")).collect()
-    }
-    assert got[("o_orderstatus", "O")] == (1, 0)
-    assert got[("o_orderstatus", "F")] == (0, 1)
-
-    # topk
-    st = str(tmp_path / "topk")
-    tfold = topk_fold(st)
-    ev = "event_id long, event_type string, value double"
-    tfold(spark.createDataFrame([(1, "t", 5.0)], ev), 0)
-    crashed = os.path.join(st, "v1")
-    os.makedirs(crashed)
-    with open(os.path.join(crashed, "part-garbage.parquet"), "w") as f:
-        f.write("torn write")
-    assert _mv_latest_version(st) == 0
-    tfold(spark.createDataFrame([(2, "t", 9.0)], ev), 1)
-    assert _mv_latest_version(st) == 1
-    rows = spark.read.parquet(os.path.join(st, "v1")).collect()
-    assert {(r.event_id, r.v_c) for r in rows} == {(1, 500), (2, 900)}
+    assert _rows(replay(spark, SF_SMALL, family)) == again
