@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..checkpoints import release
 from ..registry import spec
 
 #: how many top pairs the merge-step reports (a real trainer takes 1
@@ -273,7 +274,9 @@ def _bpe_train_state(
     paying a separate eager-checkpoint job (measured: 3 checkpoint
     jobs ~0.1 s each at sf0.1, removed; train-state call 1.07 ->
     ~0.7 s). The 1-row top1 snapshots stay lazy: they are materialized
-    by .first() and owned by the returned merge table."""
+    by .first() and owned by the returned merge table; a caller that
+    discards either half releases it (both are materialized by the time
+    this returns, so nothing the other half reads is freed)."""
     if words is None:
         words = _bpe_words(spark, sf_dir).localCheckpoint(eager=True)
     merges: list[DataFrame] = []
@@ -300,7 +303,8 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts adjacent symbol pairs over the word-frequency table (weighted,
     per-position) and greedily merges the (count DESC, pair ASC) winner
     throughout the vocabulary. Returns the learned merge table."""
-    _, merges = _bpe_train_state(spark, sf_dir)
+    words, merges = _bpe_train_state(spark, sf_dir)
+    release(words)
     out = merges[0]
     for m in merges[1:]:
         out = out.unionByName(m)
@@ -314,7 +318,9 @@ def llm_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequent words with their final segmentation and token counts — the
     apply half of the tokenizer, sharing the training loop's state (the
     final vocab table IS the encoded form; no re-scan)."""
-    words, _ = _bpe_train_state(spark, sf_dir)
+    words, merges = _bpe_train_state(spark, sf_dir)
+    for m in merges:
+        release(m)
     return (
         words.select(
             "w",
@@ -454,7 +460,9 @@ def llm_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("seq", F.rtrim(F.regexp_replace("w", "(.)", "$1 ")))
         .localCheckpoint(eager=True)
     )
-    state, _ = _bpe_train_state(spark, sf_dir, words=words)
+    state, merges = _bpe_train_state(spark, sf_dir, words=words)
+    for m in merges:
+        release(m)
     seg = state.select(
         "w", F.size(F.split("seq", " ")).alias("n_tok")
     )

@@ -505,8 +505,7 @@ def extract_features_arrow(payloads: DataFrame) -> DataFrame:
     both implementations). Against the pandas form this skips the
     Arrow<->pandas conversion and Python-object string handling on both
     edges — the preferred shape when the kernel is expressible in Arrow
-    compute; pandas remains for kernels that need numpy/scipy algebra
-    (the ANN matmuls).
+    compute.
     """
     import pyarrow as pa
     import pyarrow.compute as pc

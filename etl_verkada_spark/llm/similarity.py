@@ -1,22 +1,34 @@
 """Similarity search over the ``embeddings`` table (SURVEY.md §2.11).
 
 * ``llm_sim_search``   — brute-force cosine top-k against one query
-  vector. Scoring is ONE numpy matvec per Arrow batch (mapInArrow over
-  the flat list-values buffer — no per-row object materialization);
-  values match the oracle's sequential fold after ROUND(.,4). Scales
-  linearly: a scan-project-topk with no shuffle but the k-row
-  TakeOrdered merge.
+  vector: the scoring pass (below) with no index column. Values match
+  the oracle's sequential fold after ROUND(.,4). Scales linearly: a
+  scan-project-topk with no shuffle but the k-row TakeOrdered merge.
 * ``llm_sim_pairs``    — threshold pair search blocked by label (the
   exact metric the ANN variants approximate), oracle-checked.
 * ``llm_sim_ann_lsh``  — random-hyperplane LSH: signed projections ->
-  bucket id; the query probes only its own bucket. The projection is a
-  seeded numpy matmul inside an Arrow-batched pandas UDF (the sanctioned
-  Python path for genuinely numeric kernels). Rows-only.
-* ``llm_sim_ann_ivf``  — IVF: coarse-quantize to N_CELLS centroid cells,
-  probe the N_PROBE nearest, exact-rescore inside them. Oracle-checked:
-  the rounded-cosine assignment is recomputable relationally in DuckDB.
+  bucket id, computed in the scoring pass; the query probes its own
+  bucket and its bit-flip neighbors. Oracle-checked (inlined planes).
+* ``llm_sim_ann_ivf``  — IVF: coarse-quantize to N_CELLS centroid cells
+  in the scoring pass, probe the N_PROBE nearest, exact-rescore inside
+  them. Oracle-checked: the rounded-cosine assignment is recomputable
+  relationally in DuckDB.
 * ``llm_dedup_embed``  — embedding-cosine near-dedup: threshold edges to
   lower-id vectors -> (dup_id, keep_id) drop-list, oracle-checked.
+
+Three kernel forms, one per job:
+
+* Catalyst ``zip_with`` folds (``_dot``/``cosine``, ``_d2``) where the
+  result must equal the oracle's sequential fold bit for bit
+  (``llm_sim_pairs``) or lives on an integer grid (k-means, RP, PQ).
+* ONE ``mapInArrow`` scoring pass (``_top_k_by_cosine``) for every
+  query-vector search: it reads the list column's flat values buffer,
+  scores every row with one numpy matvec per Arrow batch, and computes
+  any ANN index column (LSH bucket, IVF cell) from the same matrix, so
+  each row crosses into Python once.
+* Grouped pandas (``applyInPandas`` over ``_block_hits``) for all pairs
+  within a label block: one Gram matmul per block, consumed as the
+  dedup drop-list or as semantic-cluster edges.
 
 100 TB path: LSH bucket assignment is a narrow map; bucketed storage
 (partitionBy(bucket)) turns every query into a single-partition read —
@@ -28,9 +40,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..catalog import table
 from ..checkpoints import checkpoint_replacing
@@ -49,22 +60,34 @@ def _as_double(col) -> F.Column:
     return c.cast("array<double>")
 
 
-def _fetch_query_vec(sf_dir: str, vec_id: int = QUERY_VEC_ID) -> list[float]:
-    """Driver-side point lookup of the query vector via pyarrow.
+def _as_matrix(emb) -> np.ndarray:
+    """Arrow list<float> array -> float64 (rows, dim) matrix, read from
+    the FLAT values buffer (no per-row object materialization; the
+    float32 -> float64 widening is exact)."""
+    flat = emb.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    return flat.reshape(len(emb), -1)
 
-    The query vector is a *parameter* of the search, not dataflow — at
-    scale it comes from a metadata/index store, not a cluster job. A
-    Spark `.first()` here costs a full scheduled job (~150 ms) per call;
-    the pushed-down pyarrow read is single-digit ms and returns the same
-    float32 values.
+
+def _read_vectors(sf_dir: str, where) -> np.ndarray:
+    """Driver-side pyarrow read of the vectors whose ``vec_id`` satisfies
+    ``where(field)``, in ascending vec_id order.
+
+    The query vector and the IVF centroids are *parameters* of a search,
+    not dataflow — at scale they come from a metadata/index store, not a
+    cluster job. A Spark `.first()` here costs a full scheduled job
+    (~150 ms) per call; the pushed-down pyarrow read is single-digit ms
+    and returns the same float32 values.
     """
     import pyarrow.dataset as ds
 
-    dset = ds.dataset(f"{sf_dir}/embeddings.parquet")
-    t = dset.to_table(
-        filter=ds.field("vec_id") == vec_id, columns=["embedding"]
+    t = ds.dataset(f"{sf_dir}/embeddings.parquet").to_table(
+        filter=where(ds.field("vec_id")), columns=["vec_id", "embedding"]
     )
-    return [float(v) for v in t.column("embedding")[0].as_py()]
+    return _as_matrix(t.sort_by("vec_id").column("embedding").combine_chunks())
+
+
+def _query_vec(sf_dir: str) -> np.ndarray:
+    return _read_vectors(sf_dir, lambda v: v == QUERY_VEC_ID)[0]
 
 
 def _dot(a, b) -> F.Column:
@@ -87,7 +110,7 @@ def cosine(a, b) -> F.Column:
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
-def _qnorm(qvec: list[float]) -> float:
+def _qnorm(qvec) -> float:
     """Driver-side ||q||: sequential double ops — the same IEEE sequence
     as the oracle's SQRT(list_dot_product(q,q)), so bit-identical."""
     import math
@@ -98,82 +121,84 @@ def _qnorm(qvec: list[float]) -> float:
     return math.sqrt(acc)
 
 
-def _sim_to_query_udf(qvec: list[float]):
-    """cosine(q, embedding) as ONE numpy matvec per Arrow batch.
+def _round4(x: np.ndarray) -> np.ndarray:
+    """ROUND(x, 4) half-away-from-zero — Spark F.round / DuckDB ROUND."""
+    return np.floor(np.abs(x) * 1e4 + 0.5) / 1e4 * np.sign(x)
 
-    The Catalyst zip_with/aggregate fold is interpreted per element
-    (round-3 bench: 28x floor-adjusted vs DuckDB); this is the same
-    batched-BLAS substitution that fixed llm_dedup_embed (5x). One
-    vector column ships JVM->Arrow->numpy, one double comes back.
+
+def _top_k_by_cosine(
+    spark: SparkSession,
+    sf_dir: str,
+    q: np.ndarray,
+    extra: tuple = (),
+    keep: Column | None = None,
+) -> DataFrame:
+    """Top-k rows of ``embeddings`` by cosine to the query vector ``q``.
+
+    ONE ``mapInArrow`` pass scores every row: the kernel reads the
+    list<float> column's flat values buffer (``_as_matrix``) and runs
+    one numpy matvec per Arrow batch. The pandas UDF ``np.vstack`` form
+    over an object Series was both slower and bimodal at sf1: 0.67-3.35 s
+    across runs vs 0.63-0.78 s for this kernel, identical top-k. Each
+    ``(name, ddl_type, fn)`` in ``extra`` adds an index column
+    ``fn(matrix, row_norms)`` computed from the same matrix, and
+    ``keep`` filters on it, so an ANN probe costs no second Python
+    crossing. Rounding stays JVM-side (F.round HALF_UP — numpy rounds
+    half-even). The plan is scan -> kernel -> TakeOrdered, no shuffle;
+    ordering is total (rounded sim desc, vec_id) so top-k is
+    deterministic.
+
     Float caveat: numpy sums pairwise/SIMD, the oracle folds
     sequentially — identical after ROUND(.,4) except within ~1 ulp of a
     rounding boundary (same accepted risk as llm_dedup_embed, verified
     over every row at sf0.01 and sf0.1).
     """
-    q = np.array(qvec, dtype=np.float64)
-    qn = _qnorm(qvec)
-
-    @pandas_udf("double")
-    def sim_of(emb: pd.Series) -> pd.Series:
-        mat = np.vstack(emb.to_numpy()).astype(np.float64)
-        dots = mat @ q
-        norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
-        return pd.Series(dots / (qn * norms))
-
-    return sim_of
-
-
-def llm_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k for the query vector (vec_id=0).
-
-    The query vector is collected once (one row) and inlined into the
-    scoring kernel — the degenerate broadcast. Scoring is a
-    ``mapInArrow`` kernel that reads the list<float> column's FLAT
-    values buffer and reshapes to (n, dim) — one numpy matvec per
-    Arrow batch with no per-row object materialization (the pandas_udf
-    ``np.vstack`` over an object Series was both slower and bimodal at
-    sf1: 0.67-3.35 s across runs vs 0.63-0.78 s for this kernel,
-    identical top-k). Rounding stays JVM-side (F.round HALF_UP — numpy
-    rounds half-even). The plan is scan -> kernel -> TakeOrdered, no
-    shuffle; ordering is total (rounded sim desc, vec_id) so top-k is
-    deterministic.
-    """
-    e = table(spark, sf_dir, "embeddings")
-    qvec = _fetch_query_vec(sf_dir)
-    q = np.array(qvec, dtype=np.float64)
-    qn = _qnorm(qvec)
+    qn = _qnorm(q)
+    names = [name for name, _, _ in extra]
 
     def kernel(it):
         import pyarrow as pa
 
         for batch in it:
-            emb = batch.column("embedding")
-            flat = emb.flatten().to_numpy(zero_copy_only=False).astype(
-                np.float64
-            )
-            mat = flat.reshape(len(emb), -1)
-            dots = mat @ q
+            mat = _as_matrix(batch.column("embedding"))
             norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
             yield pa.record_batch(
-                [
-                    batch.column("vec_id"),
-                    batch.column("label"),
-                    pa.array(dots / (qn * norms), pa.float64()),
-                ],
-                names=["vec_id", "label", "sim_raw"],
+                [batch.column("vec_id"), batch.column("label")]
+                + [pa.array(fn(mat, norms)) for _, _, fn in extra]
+                + [pa.array((mat @ q) / (qn * norms), pa.float64())],
+                names=["vec_id", "label", *names, "sim_raw"],
             )
 
-    label_type = dict(e.dtypes)["label"]
+    e = table(spark, sf_dir, "embeddings")
+    schema = ", ".join(
+        ["vec_id long", f"label {dict(e.dtypes)['label']}"]
+        + [f"{name} {ddl}" for name, ddl, _ in extra]
+        + ["sim_raw double"]
+    )
     scored = (
         e.filter(F.col("vec_id") != QUERY_VEC_ID)
         .select("vec_id", "label", "embedding")
-        .mapInArrow(kernel, f"vec_id long, label {label_type}, sim_raw double")
+        .mapInArrow(kernel, schema)
     )
+    if keep is not None:
+        scored = scored.filter(keep)
     return (
-        scored.select("vec_id", "label", F.round("sim_raw", 4).alias("sim"))
+        scored.select(
+            "vec_id", "label", *names, F.round("sim_raw", 4).alias("sim")
+        )
         .orderBy(F.col("sim").desc(), "vec_id")
         .limit(TOP_K)
     )
+
+
+def llm_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-k for the query vector (vec_id=0).
+
+    The query vector is read once on the driver and inlined into the
+    scoring kernel — the degenerate broadcast — then every other row is
+    scored by the one pass of :func:`_top_k_by_cosine`.
+    """
+    return _top_k_by_cosine(spark, sf_dir, _query_vec(sf_dir))
 
 
 ORACLE_LLM_SIM_SEARCH = """
@@ -263,34 +288,28 @@ def llm_sim_ann_lsh(
 ) -> DataFrame:
     """ANN: random-hyperplane LSH with multi-probe + in-bucket rescoring.
 
-    Signature = sign bits of seeded Gaussian projections (numpy matmul
-    in an Arrow-batched pandas UDF — one JVM->Arrow->numpy round trip
-    per batch, no per-row Python). The query probes its own bucket plus
-    every bucket within Hamming distance ``multiprobe`` of it —
-    multi-probe LSH (Lv et al., VLDB'07): near neighbors that fall just
-    across one hyperplane land one bit-flip away, so probing the flip
-    neighborhood buys recall WITHOUT more hash tables (at 100 TB,
-    1 + N_PLANES partition-pruned reads instead of another full index).
-    Exact cosine rescores the survivors. Rows-only (bucket content is
-    sketch-dependent), deterministic via the fixed seed.
+    Signature = sign bits of seeded Gaussian projections, one numpy
+    matmul per Arrow batch inside the scoring pass
+    (:func:`_top_k_by_cosine`), which also computes the exact cosine the
+    survivors are ranked by. The query probes its own bucket plus every
+    bucket within Hamming distance ``multiprobe`` of it — multi-probe
+    LSH (Lv et al., VLDB'07): near neighbors that fall just across one
+    hyperplane land one bit-flip away, so probing the flip neighborhood
+    buys recall WITHOUT more hash tables (at 100 TB, 1 + N_PLANES
+    partition-pruned reads instead of another full index).
+    Deterministic via the fixed seed.
     """
-    e = table(spark, sf_dir, "embeddings")
-    qvec = _fetch_query_vec(sf_dir)
-    planes = _planes(len(qvec))
+    q = _query_vec(sf_dir)
+    planes = _planes(len(q))
+    weights = (1 << np.arange(N_PLANES)).astype(np.int64)
 
-    @pandas_udf("long")
-    def bucket_of(emb: pd.Series) -> pd.Series:
-        mat = np.vstack(emb.to_numpy())  # (batch, dim) float32
-        bits = (mat.astype(np.float64) @ planes.T) > 0  # (batch, n_planes)
-        weights = (1 << np.arange(N_PLANES)).astype(np.int64)
-        return pd.Series(bits @ weights)
+    def bucket_of(mat: np.ndarray, _norms: np.ndarray) -> np.ndarray:
+        return ((mat @ planes.T) > 0) @ weights  # (batch,) int64
 
     # The query's bucket is computed driver-side with the same float32 ->
-    # float64 promotion the UDF applies, so it lands in the same bucket.
-    qbits = (
-        np.array(qvec, dtype=np.float32).astype(np.float64) @ planes.T
-    ) > 0
-    qbucket = int(qbits @ (1 << np.arange(N_PLANES)).astype(np.int64))
+    # float64 promotion the kernel applies, so it lands in the same bucket.
+    qbits = (np.array(q, dtype=np.float32).astype(np.float64) @ planes.T) > 0
+    qbucket = int(qbits @ weights)
     probes = {qbucket}
     if multiprobe >= 1:
         probes.update(qbucket ^ (1 << b) for b in range(N_PLANES))
@@ -299,17 +318,10 @@ def llm_sim_ann_lsh(
             for b2 in range(b1 + 1, N_PLANES):
                 probes.add(qbucket ^ (1 << b1) ^ (1 << b2))
 
-    with_bucket = e.select("vec_id", "label", "embedding",
-                           bucket_of("embedding").alias("bucket"))
-    sim = F.round(_sim_to_query_udf(qvec)(F.col("embedding")), 4)
-    return (
-        with_bucket.filter(
-            F.col("bucket").isin(sorted(probes))
-            & (F.col("vec_id") != QUERY_VEC_ID)
-        )
-        .select("vec_id", "label", "bucket", sim.alias("sim"))
-        .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(TOP_K)
+    return _top_k_by_cosine(
+        spark, sf_dir, q,
+        extra=(("bucket", "long", bucket_of),),
+        keep=F.col("bucket").isin(sorted(probes)),
     )
 
 
@@ -373,6 +385,21 @@ ORACLE_LLM_SIM_ANN_LSH = _lsh_oracle()
 EMBED_DUP_THRESHOLD = 0.4  # rounded-cosine cutoff; testdata max sim ~0.5
 
 
+def _block_hits(
+    pdf: pd.DataFrame, threshold: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """One label block's Gram kernel: the block's ids in ascending order
+    and the mask ``hit[i, j]`` = ROUND(cosine(i, j), 4) >= threshold,
+    kept on the strict upper triangle — ids ascend, so that is exactly
+    the pairs with ``a.vec_id < b.vec_id``, row i the lower id."""
+    pdf = pdf.sort_values("vec_id")
+    ids = pdf["vec_id"].to_numpy()
+    x = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+    norms = np.sqrt(np.einsum("ij,ij->i", x, x))
+    sims = (x @ x.T) / np.outer(norms, norms)
+    return ids, np.triu(_round4(sims) >= threshold, k=1)
+
+
 def llm_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dedup: drop-list with keeper assignment.
 
@@ -383,11 +410,12 @@ def llm_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Blocking by label bounds the pair space exactly like the LSH/IVF
     cells do at 100 TB.
 
-    The pair metric is ONE numpy Gram matmul per label block inside
-    ``applyInPandas`` — the standard blocked-similarity kernel — instead
-    of a per-pair interpreted Catalyst fold (measured 32x slower at
-    sf0.1, round-1 bench). The shuffle moves each vector once (blocking
-    key = label); compute is BLAS over an Arrow batch. At 100 TB the
+    The pair metric is ONE numpy Gram matmul per label block
+    (:func:`_block_hits`) inside ``applyInPandas`` — the standard
+    blocked-similarity kernel — instead of a per-pair interpreted
+    Catalyst fold (measured 32x slower at sf0.1, round-1 bench). The
+    shuffle moves each vector once (blocking key = label); compute is
+    BLAS over an Arrow batch. At 100 TB the
     same kernel chunks the block row-wise (X_chunk @ X_block.T) so
     memory stays O(chunk * block); block size is bounded by the blocking
     key exactly as IVF cell size is.
@@ -402,31 +430,17 @@ def llm_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def block_dedup(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        ids = pdf["vec_id"].to_numpy()
-        x = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", x, x))
-        sims = (x @ x.T) / np.outer(norms, norms)
-        # ROUND(sim, 4) half-away-from-zero, matching Spark F.round /
-        # DuckDB ROUND on doubles
-        rounded = np.floor(np.abs(sims) * 1e4 + 0.5) / 1e4 * np.sign(sims)
-        # edges: lower-id row i -> higher-id row j (ids ascending, so
-        # strict upper triangle == a.vec_id < b.vec_id)
-        hit = np.triu(rounded >= EMBED_DUP_THRESHOLD, k=1)
+        ids, hit = _block_hits(pdf, EMBED_DUP_THRESHOLD)
         n_matches = hit.sum(axis=0)  # per higher-id column j
         dup_cols = np.flatnonzero(n_matches)
-        if dup_cols.size == 0:
-            return pd.DataFrame(
-                {"dup_id": [], "keep_id": [], "n_matches": []},
-                dtype="int64",
-            )
         keep_rows = hit[:, dup_cols].argmax(axis=0)  # first True = min id
         return pd.DataFrame(
             {
                 "dup_id": ids[dup_cols],
                 "keep_id": ids[keep_rows],
-                "n_matches": n_matches[dup_cols].astype(np.int64),
-            }
+                "n_matches": n_matches[dup_cols],
+            },
+            dtype="int64",
         )
 
     return e.groupBy("label").applyInPandas(
@@ -468,13 +482,8 @@ def embed_sim_edges(
     )
 
     def block_edges(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        ids = pdf["vec_id"].to_numpy()
-        x = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", x, x))
-        sims = (x @ x.T) / np.outer(norms, norms)
-        rounded = np.floor(np.abs(sims) * 1e4 + 0.5) / 1e4 * np.sign(sims)
-        rows, cols = np.nonzero(np.triu(rounded >= threshold, k=1))
+        ids, hit = _block_hits(pdf, threshold)
+        rows, cols = np.nonzero(hit)
         return pd.DataFrame(
             {"doc_a": ids[rows], "doc_b": ids[cols]}, dtype="int64"
         )
@@ -539,11 +548,6 @@ N_CELLS = 16  # IVF cells; centroids = the first N_CELLS vectors by id
 N_PROBE = 2
 
 
-def _round4(x: np.ndarray) -> np.ndarray:
-    """ROUND(x, 4) half-away-from-zero — Spark F.round / DuckDB ROUND."""
-    return np.floor(np.abs(x) * 1e4 + 0.5) / 1e4 * np.sign(x)
-
-
 def llm_sim_ann_ivf(
     spark: SparkSession, sf_dir: str, n_probe: int = N_PROBE
 ) -> DataFrame:
@@ -551,9 +555,10 @@ def llm_sim_ann_ivf(
 
     Centroids are the N_CELLS lowest-id vectors (a deterministic stand-in
     for a k-means codebook; training is an offline job, not the query).
-    Cell assignment is one numpy Gram matvec per Arrow batch — argmax of
-    the ROUNDED (4 dp) cosine, lowest cell winning ties — and the query
-    probes its N_PROBE nearest cells (same rounded metric), then exact
+    Cell assignment is one numpy Gram matvec per Arrow batch inside the
+    scoring pass (:func:`_top_k_by_cosine`) — argmax of the ROUNDED
+    (4 dp) cosine, lowest cell winning ties — and the query probes its
+    N_PROBE nearest cells (same rounded metric); the same pass's exact
     cosine rescores inside them.
 
     Oracle-checked (round-4 upgrade from rows-only): every step — cell
@@ -567,43 +572,24 @@ def llm_sim_ann_ivf(
     probe is N_PROBE partition-pruned reads — the scan never touches the
     other cells; recall/cost tunes with N_PROBE exactly as in FAISS-IVF.
     """
-    e = table(spark, sf_dir, "embeddings")
-    import pyarrow.dataset as ds
-
-    dset = ds.dataset(f"{sf_dir}/embeddings.parquet")
-    cent_tbl = dset.to_table(
-        filter=ds.field("vec_id") < N_CELLS, columns=["vec_id", "embedding"]
-    ).sort_by("vec_id")
-    cents = np.array(
-        [list(v) for v in cent_tbl.column("embedding").to_pylist()],
-        dtype=np.float64,
-    )
+    q = _query_vec(sf_dir)
+    cents = _read_vectors(sf_dir, lambda v: v < N_CELLS)
     cnorms = np.sqrt(np.einsum("ij,ij->i", cents, cents))
 
-    @pandas_udf("int")
-    def cell_of(emb: pd.Series) -> pd.Series:
-        mat = np.vstack(emb.to_numpy()).astype(np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
+    def cell_of(mat: np.ndarray, norms: np.ndarray) -> np.ndarray:
         sims = _round4((mat @ cents.T) / np.outer(norms, cnorms))
         # np.argmax takes the FIRST max -> lowest cell id wins ties,
         # mirroring the oracle's ORDER BY sim DESC, cell.
-        return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
+        return np.argmax(sims, axis=1).astype(np.int32)
 
-    qvec = np.array(_fetch_query_vec(sf_dir), dtype=np.float64)
-    qsims = _round4((cents @ qvec) / (cnorms * _qnorm([float(v) for v in qvec])))
+    qsims = _round4((cents @ q) / (cnorms * _qnorm(q)))
     # stable argsort of -x keeps ascending cell order on ties
     probe_cells = [int(c) for c in np.argsort(-qsims, kind="stable")[:n_probe]]
 
-    sim = F.round(_sim_to_query_udf([float(v) for v in qvec])(F.col("embedding")), 4)
-    return (
-        e.select("vec_id", "label", "embedding", cell_of("embedding").alias("cell"))
-        .filter(
-            F.col("cell").isin(probe_cells)
-            & (F.col("vec_id") != QUERY_VEC_ID)
-        )
-        .select("vec_id", "label", "cell", sim.alias("sim"))
-        .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(TOP_K)
+    return _top_k_by_cosine(
+        spark, sf_dir, q,
+        extra=(("cell", "int", cell_of),),
+        keep=F.col("cell").isin(probe_cells),
     )
 
 
@@ -1266,7 +1252,7 @@ ORACLE_LLM_SIM_ANN_PQ = _pq_oracle()
 QUERIES = {
     "llm_sim_search": spec(
         llm_sim_search, ORACLE_LLM_SIM_SEARCH, "llm",
-        doc="brute-force cosine top-k (JVM-side fold)",
+        doc="brute-force cosine top-k (one Arrow scoring pass)",
     ),
     "llm_sim_pairs": spec(
         llm_sim_pairs, ORACLE_LLM_SIM_PAIRS, "llm",

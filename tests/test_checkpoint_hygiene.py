@@ -7,6 +7,8 @@ final snapshot (owned by the returned DataFrame) may outlive a call.
 
 from __future__ import annotations
 
+import pytest
+
 from .conftest import SF_SMALL
 
 
@@ -68,3 +70,25 @@ def test_iteratives_release_superseded(spark):
     assert df.count() > 0
     assert _n_persistent(spark) - before <= 1
     release(df)
+
+
+@pytest.mark.parametrize(
+    "name", ["llm_bpe_train", "llm_bpe_encode", "llm_tokenizer_fertility"]
+)
+def test_bpe_queries_leave_only_their_result(spark, name):
+    """The BPE trainer returns its final vocabulary state AND its per-step
+    merge tables, all checkpointed; each query keeps one half and must
+    release the other, so releasing the result leaves no RDD the call
+    persisted. Compared by RDD id, not by count: the ContextCleaner may
+    free an earlier test's RDDs meanwhile."""
+    from etl_verkada_spark.checkpoints import release
+    from etl_verkada_spark.llm import bpe
+
+    def persistent_ids() -> set:
+        return set(spark._jsc.getPersistentRDDs().keys())
+
+    before = persistent_ids()
+    df = getattr(bpe, name)(spark, SF_SMALL)
+    assert df.collect()
+    release(df)
+    assert persistent_ids() - before == set()

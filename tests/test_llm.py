@@ -245,6 +245,81 @@ def test_lsh_multiprobe_recall_dominates_single_bucket(spark):
     assert len(multi) >= len(single)
 
 
+@pytest.mark.parametrize(
+    "name, node, banned",
+    [
+        ("llm_sim_search", "MapInArrow", "ArrowEvalPython"),
+        ("llm_sim_ann_lsh", "MapInArrow", "ArrowEvalPython"),
+        ("llm_sim_ann_ivf", "MapInArrow", "ArrowEvalPython"),
+        ("llm_dedup_embed", "FlatMapGroupsInPandas", "ArrowEvalPython"),
+    ],
+)
+def test_embedding_kernels_cross_into_python_once(spark, name, node, banned):
+    """Each search scores every row AND computes its ANN index column in
+    one Arrow pass; dedup is one grouped Gram kernel per label block."""
+    from etl_verkada_spark.llm import similarity
+
+    df = getattr(similarity, name)(spark, "/root/testdata/sf0.001")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count(node) == 1 and banned not in plan, plan
+
+
+def _block(rows):
+    import numpy as np
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "vec_id": [i for i, _ in rows],
+            "embedding": [np.array(v, dtype=np.float32) for _, v in rows],
+        }
+    )
+
+
+def test_block_hits_degenerate_blocks():
+    """_block_hits on blocks with no pair, no hit, and one exact dup."""
+    from etl_verkada_spark.llm.similarity import _block_hits
+
+    ids, hit = _block_hits(_block([(7, [1.0, 2.0, 3.0])]), 0.4)
+    assert ids.tolist() == [7] and hit.shape == (1, 1) and not hit.any()
+
+    orthogonal = _block([(3, [1, 0, 0]), (1, [0, 1, 0]), (2, [0, 0, 1])])
+    ids, hit = _block_hits(orthogonal, 0.4)
+    assert ids.tolist() == [1, 2, 3] and not hit.any()
+
+    ids, hit = _block_hits(
+        _block([(9, [0.5, -1.0, 2.0]), (4, [0.5, -1.0, 2.0])]), 0.4
+    )
+    assert ids.tolist() == [4, 9]
+    assert hit.tolist() == [[False, True], [False, False]]
+
+
+def test_embed_dedup_no_match_keeps_long_columns(spark, tmp_path):
+    """A corpus with no pair over the threshold (orthogonal vectors plus
+    a one-vector block) yields an empty drop-list with long columns."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_verkada_spark.llm.similarity import llm_dedup_embed
+
+    basis = [[float(i == j) for j in range(64)] for i in range(4)]
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([0, 1, 2, 3], pa.int64()),
+                "embedding": pa.array(basis, pa.list_(pa.float32())),
+                "label": pa.array([0, 0, 0, 1], pa.int32()),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    df = llm_dedup_embed(spark, str(tmp_path))
+    assert df.collect() == []
+    assert df.dtypes == [
+        ("dup_id", "bigint"), ("keep_id", "bigint"), ("n_matches", "bigint")
+    ]
+
+
 def test_minhash_recall_on_true_neardups(spark):
     """Population scan + recall: the oracle's 100%-LSH-recall assumption
     holds only above MINHASH_THRESHOLD (boundary miss (1-t^4)^32 ~= 5e-6
